@@ -35,37 +35,26 @@ object AnnOps {
 
   /** The md5-seeded 64-centroid argmax assignment (cid, vec_id, cs, v)
     * THREE graded queries recompute identically (dd_semantic,
-    * ann_cluster_exemplars, ann_proto_prune — r16 verdict item 7):
-    * one broadcast-scored rank-1 pass, localCheckpoint'd and memoized
-    * per (session UUID, dir) the srcLossCache way. The checkpoint is
-    * a bench/verify-session optimization over a STATIC directory; at
-    * production scale this frame is the written assignment table the
-    * three reports would all read.
+    * ann_cluster_exemplars, ann_proto_prune): one broadcast-scored
+    * rank-1 pass, localCheckpoint'd and kept in the SessionCache. The
+    * checkpoint is a bench/verify-session optimization; at production
+    * scale this frame is the written assignment table the three
+    * reports would all read.
     */
-  private val protoAssignCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   private[graft] def protoAssign(s: SparkSession, d: String): DataFrame =
-    protoAssignCache.getOrElseUpdate(
-      (org.apache.spark.sql.GraftSqlBridge.sessionUUID(s), d), {
-        GraftFunctions.register(s)
-        val c = corpus(s, d)
-        val cents = broadcast(
-          c.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(64)
-            .select(col("vec_id").as("cid"), col("v").as("cv")))
-        val scored = c.join(cents)
-          .selectExpr("vec_id", "v", "cid", "round(cosine_sim(v, cv), 4) AS cs")
-        graft.plans.TopKPerKeyOps.topK(scored, Seq("vec_id"),
-            Seq(col("cs").desc, col("cid").asc), 1)
-          .select(col("cid"), col("vec_id"), col("cs"), col("v"))
-          .localCheckpoint()
-      })
-
-  /** Evict a session's memoized assignment frames. */
-  def clearCaches(s: SparkSession): Unit = {
-    val id = org.apache.spark.sql.GraftSqlBridge.sessionUUID(s)
-    protoAssignCache.keys.filter(_._1 == id).foreach(protoAssignCache.remove)
-  }
+    graft.util.SessionCache(s, "proto-assign", Seq(graft.Tables.read(s, d, "embeddings"))) {
+      GraftFunctions.register(s)
+      val c = corpus(s, d)
+      val cents = broadcast(
+        c.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(64)
+          .select(col("vec_id").as("cid"), col("v").as("cv")))
+      val scored = c.join(cents)
+        .selectExpr("vec_id", "v", "cid", "round(cosine_sim(v, cv), 4) AS cs")
+      graft.plans.TopKPerKeyOps.topK(scored, Seq("vec_id"),
+          Seq(col("cs").desc, col("cid").asc), 1)
+        .select(col("cid"), col("vec_id"), col("cs"), col("v"))
+        .localCheckpoint()
+    }
 
   /** Driver/kernel-side `round(cosine_sim(a, b), 4)`: the SAME fused
     * dot/norm loop as CosineSimilarity.nullSafeEval/doGenCode (index
@@ -389,6 +378,18 @@ object AnnOps {
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
+  /** (cid, score) probe-list order: score descending under Spark's SQL
+    * double ordering (NaN — a zero-norm cosine — largest, −0.0 == 0.0),
+    * ties to cid ascending: the SQL order the lists replicate, and a
+    * total order, which a numeric `<` on NaN is not.
+    */
+  private[graft] val probeOrder: Ordering[(Long, Double)] = new Ordering[(Long, Double)] {
+    def compare(x: (Long, Double), y: (Long, Double)): Int = {
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(y._2, x._2)
+      if (c != 0) c else java.lang.Long.compare(x._1, y._1)
+    }
+  }
+
   /** Driver-side replica of Spark's round(col, 4) on DoubleType:
     * HALF_UP over the Double.toString decimal form (what
     * scala.math.BigDecimal(d) constructs), NaN/Inf passed through —
@@ -409,11 +410,9 @@ object AnnOps {
     GraftFunctions.register(s)
     import s.implicits._
     val nProbe = 4
-    // r18 (ann_ivf_pq treatment): the centroid sample and the 16-row
-    // probe collect are independent bounded jobs — run them
-    // concurrently, and build the probe lists on the driver with the
-    // spec-pinned cosineSimLocal replica (bit-identical to the in-row
-    // array_sort form it replaces) instead of a broadcast-build job.
+    // the centroid sample and the 16-row probe collect are independent
+    // bounded jobs, run concurrently; the probe lists are built on the
+    // driver with the spec-pinned cosineSimLocal replica and probeOrder
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     val centsF = Future { collectCents(ivfCentroids(c)) }
@@ -426,13 +425,9 @@ object AnnOps {
     val assign = c.withColumn("best", array_max(centScoreArray(centRows)))
       .select((-col("best").getField("ncid")).as("cid"), col("vec_id"), col("v"))
     val probeLists = probeRows.toSeq.flatMap { case (pid, pv) =>
-      centRows.map { case (cid, cv) => (cid, pid, cosineSimLocal(pv, cv)) }
-        // numeric double compare, ties to cid asc — the exact SQL
-        // comparator probeListsInRow used; both sorts are stable over
-        // the cid-ascending input order
-        .sortWith { case ((c1, _, s1), (c2, _, s2)) =>
-          if (s1 > s2) true else if (s1 < s2) false else c1 < c2 }
-        .take(nProbe).map { case (cid, p, _) => (cid, p, pv) }
+      centRows.map { case (cid, cv) => (cid, cosineSimLocal(pv, cv)) }
+        .sorted(probeOrder)
+        .take(nProbe).map { case (cid, _) => (cid, pid, pv) }
     }.toDF("cid", "probe", "pv")
     val cand = broadcast(probeLists)
       .join(assign.select(col("cid"), col("vec_id").as("neighbor"), col("v").as("nv")), "cid")
@@ -1154,20 +1149,13 @@ object AnnOps {
         i <- 0 until 8
       } yield seeds(j)(p * 8 + i)).toArray
       val probes = Await.result(probesF, scala.concurrent.duration.Duration.Inf)
-      // r18: the probe lists are a 16×nProbe frame whose inputs (probe
-      // vectors, centroid rows) are already on the driver — build them
-      // here with the spec-pinned cosine/round4 replicas (bit-identical
-      // to round(cosine_sim(v, cv), 4) + the (cs desc, cid asc) sort)
-      // instead of paying a corpus-scan broadcast-build job per run.
+      // the 16×nProbe probe lists are built on the driver, whose
+      // inputs are already there, with the spec-pinned replicas of
+      // round(cosine_sim(v, cv), 4) and the (cs desc, cid asc) sort
       val plistRows = probes.toSeq.zipWithIndex.flatMap { case ((pid, qv), pidx) =>
-        centRows.map { case (cid, cv) =>
-          (pid, cid.toInt, round4Local(cosineSimLocal(qv, cv))) }
-          // numeric double compare (−0.0 == 0.0 ties to cid asc), the
-          // exact SQL comparator the in-row array_sort form used; both
-          // sorts are stable over the cid-ascending input order
-          .sortWith { case ((_, c1, s1), (_, c2, s2)) =>
-            if (s1 > s2) true else if (s1 < s2) false else c1 < c2 }
-          .take(nProbe).map { case (p, cid2, _) => (p, cid2, pidx) }
+        centRows.map { case (cid, cv) => (cid, round4Local(cosineSimLocal(qv, cv))) }
+          .sorted(probeOrder)
+          .take(nProbe).map { case (cid, _) => (pid, cid.toInt, pidx) }
       }
       val plists = broadcast(plistRows.toDF("probe", "cid", "pidx"))
       // ADC lookup table flattened to ONE array literal indexed by
@@ -1563,9 +1551,9 @@ object AnnOps {
     // silent work.
     ("dd_semantic", (s: SparkSession, d: String) => {
       GraftFunctions.register(s)
-      // r17: the rank-1 assignment comes from the shared memoized
-      // frame (protoAssign) — same (cs desc, cid asc) argmax the old
-      // inline window computed, built once per (session, dir)
+      // the rank-1 assignment comes from the shared cached frame
+      // (protoAssign) — same (cs desc, cid asc) argmax the old inline
+      // window computed
       val assign = protoAssign(s, d).select(col("cid"), col("vec_id"), col("v"))
       val sized = assign.withColumn("bn",
         count(lit(1)).over(Window.partitionBy("cid")))
@@ -1935,7 +1923,7 @@ object AnnOps {
     // rows.
     ("ann_cluster_exemplars", (s: SparkSession, d: String) => {
       GraftFunctions.register(s)
-      // r17: shared memoized assignment frame (protoAssign)
+      // shared cached assignment frame (protoAssign)
       val assign = protoAssign(s, d).select(col("cid"), col("vec_id"), col("cs"))
       val w = Window.partitionBy("cid").orderBy(col("cs").desc, col("vec_id").asc)
       assign.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
@@ -1987,7 +1975,7 @@ object AnnOps {
     // cut boundary a downstream filter would apply).
     ("ann_proto_prune", (s: SparkSession, d: String) => {
       GraftFunctions.register(s)
-      // r17: shared memoized assignment frame (protoAssign)
+      // shared cached assignment frame (protoAssign)
       val assign = protoAssign(s, d).select(col("cid"), col("vec_id"), col("cs"))
       val ranked = assign
         .withColumn("rk", row_number().over(

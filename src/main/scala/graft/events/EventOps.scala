@@ -275,8 +275,9 @@ object EventOps {
     // in-flight ids (every 97th missing). Bounded global window; at
     // scale this runs over the head slice only.
     ("ev_gaps", (s: SparkSession, d: String) => {
-      val visible = Event.project(ev(s, d)).filter(col("id") % 97 =!= 0)
-      Patterns.gaps(visible, Some(s"ev_gaps:$d")).orderBy("gap_start")
+      val raw = ev(s, d)
+      val visible = Event.project(raw).filter(col("id") % 97 =!= 0)
+      Patterns.gaps(visible, Some("ev_gaps" -> raw)).orderBy("gap_start")
     }, Some("""
       SELECT prev + 1 AS gap_start, id - 1 AS gap_end
       FROM (SELECT event_id AS id, lag(event_id) OVER (ORDER BY event_id) AS prev
@@ -666,7 +667,8 @@ object EventOps {
     // AGGREGATES) — the corpus is never sorted into one partition;
     // the oracle states the same thing as one global window.
     ("ev_disorder", (s: SparkSession, d: String) => {
-      val base = Event.project(ev(s, d))
+      val raw = ev(s, d)
+      val base = Event.project(raw)
         .select(col("id"), unix_timestamp(col("ts")).as("sec"),
           to_date(col("ts")).as("day"))
         .withColumn("blk", floor(col("id") / 4096L))
@@ -677,7 +679,7 @@ object EventOps {
       // window form only when the measured size passes the bound)
       val (blkPfx, smallBlk) = graft.util.Prefix.cumExcl(s,
         base.groupBy("blk").agg(max("sec").as("bmax")), "blk", "bmax", "max",
-        cacheKey = Some(s"ev_disorder:$d"))
+        cacheKey = Some("ev_disorder" -> raw))
       val blkMax0 = blkPfx.select(col("blk"), col("prefix").as("pmax_prev"))
       val blkMax = if (smallBlk) broadcast(blkMax0) else blkMax0.hint("SHUFFLE_HASH")
       val late = base
@@ -1081,7 +1083,7 @@ object EventOps {
       // SHUFFLE_HASH — the window exchange on grp exists either way)
       val (grpPfx, smallGrp) = graft.util.Prefix.cumExcl(s,
         e.groupBy("grp").agg(max("es").as("gmax")), "grp", "gmax", "max",
-        cacheKey = Some(s"ev_lateness:$d"))
+        cacheKey = Some("ev_lateness" -> raw))
       val prior0 = grpPfx.select("grp", "prefix")
       val prior = if (smallGrp) broadcast(prior0) else prior0.hint("SHUFFLE_HASH")
       val wIn = Window.partitionBy("grp").orderBy("id")
@@ -1264,10 +1266,10 @@ object EventOps {
       // verified at runtime instead of assumed; above → the
       // range-partitioned prefix sum (rangeCumHist) with a
       // co-partitioned SHUFFLE_HASH join-back. Both paths exact.
-      // the smallness verdict is memoized per (session, dir) — the
+      // the smallness verdict is memoized (Prefix.memoSmall) — the
       // measure job (a full per-user aggregation) was a fixed 8.1x tax
-      // at sf1 paid on every execution over the same static directory
-      val mSmall = graft.util.Prefix.memoSmall(s, s"ev_rfm_segments:m:$d") {
+      // at sf1 paid on every execution over the same input
+      val mSmall = graft.util.Prefix.memoSmall(s, "ev_rfm_segments:m", raw) {
         u.groupBy("m").agg(count(lit(1)).as("cnt")).count() <=
           graft.GraftConf.getLong(s, graft.GraftConf.PrefixBroadcastMaxRows)
       }
@@ -1549,13 +1551,14 @@ object EventOps {
     // boundaries are block-atomic, the granularity a row-group scan
     // actually prunes at. Output: per chunk, id bounds + actual rows.
     ("ev_backfill_plan", (s: SparkSession, d: String) => {
-      val blocks = ev(s, d)
+      val raw = ev(s, d)
+      val blocks = raw
         .select(expr("event_id div 4096").as("blk"))
         .groupBy("blk").agg(count(lit(1)).as("cnt"))
       // checked-bounded prefix sum over the block frame (corpus/4096
       // rows — Prefix.cumExcl picks window vs range path by size)
       val (pfx, _) = graft.util.Prefix.cumExcl(s, blocks, "blk", "cnt", "sum",
-        cacheKey = Some(s"ev_backfill_plan:$d"))
+        cacheKey = Some("ev_backfill_plan" -> raw))
       val tot = pfx.agg(sum("cnt").as("total"))
       pfx.crossJoin(broadcast(tot))
         .withColumn("chunk",
@@ -1664,7 +1667,7 @@ object EventOps {
       // (corpus/4096 rows — same Prefix.cumExcl discipline as A62)
       val (grpPfx, smallGrp) = graft.util.Prefix.cumExcl(s,
         e.groupBy("grp").agg(max("es").as("gmax")), "grp", "gmax", "max",
-        cacheKey = Some(s"ev_watermark_report:$d"))
+        cacheKey = Some("ev_watermark_report" -> raw))
       val prior0 = grpPfx.select("grp", "prefix")
       val prior = if (smallGrp) broadcast(prior0) else prior0.hint("SHUFFLE_HASH")
       val wIn = Window.partitionBy("grp").orderBy("id")

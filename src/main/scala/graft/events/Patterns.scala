@@ -61,7 +61,7 @@ object Patterns {
     * the checked bound. Empty blocks fall inside those boundary gaps
     * naturally. No single partition ever sorts the full id set.
     */
-  def gaps(events: DataFrame, cacheKey: Option[String] = None): DataFrame = {
+  def gaps(events: DataFrame, cacheKey: Option[(String, DataFrame)] = None): DataFrame = {
     val s = events.sparkSession
     val t = events.select(col("id"))
       .withColumn("blk", call_function("div", col("id"), lit(4096L)))

@@ -17,37 +17,6 @@ object TextOps {
   private def docs(s: SparkSession, d: String): DataFrame =
     graft.Tables.documents(s, d)
 
-  /** Bench-gram frames cached by tx_bloom_decontaminate, keyed
-    * (sessionUUID, dataDir) like DedupOps.sigCache — repeated
-    * invocations reuse ONE persisted entry, and `clearCaches`
-    * unpersists + drops the per-dir temp views so a long-lived
-    * session sweeping many data dirs doesn't accumulate entries.
-    */
-  private val benchGramCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (DataFrame, String)]
-
-  /** pipeline_doremi_mix's per-source loss table (a sources-sized
-    * localCheckpoint'd frame — the once-per-corpus model artifact the
-    * reweighting rounds iterate on), memoized per (session, dataDir).
-    */
-  private val srcLossCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def sid(s: SparkSession): String =
-    org.apache.spark.sql.GraftSqlBridge.sessionUUID(s)
-
-  /** Unpersist and evict every bench-gram frame + temp view cached
-    * for `s`. */
-  def clearCaches(s: SparkSession): Unit = {
-    val id = sid(s)
-    benchGramCache.keys.filter(_._1 == id).foreach { k =>
-      benchGramCache.remove(k).foreach { case (df, view) =>
-        df.unpersist(); s.catalog.dropTempView(view); ()
-      }
-    }
-    // localCheckpoint blocks free with the session; evict the entries
-    srcLossCache.keys.filter(_._1 == id).foreach(srcLossCache.remove)
-  }
-
   /** lower-case, strip non-alphanumerics, collapse whitespace. */
   def normalize(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9\\s]", " "), "\\s+", " "))
@@ -559,9 +528,12 @@ object TextOps {
     * instead of an interpreted explode. Token semantics identical to
     * `explode(tokens(text))`.
     */
-  def docTermCounts(s: SparkSession, d: String): DataFrame = {
+  def docTermCounts(s: SparkSession, d: String): DataFrame = docTermCounts(docs(s, d))
+
+  def docTermCounts(documents: DataFrame): DataFrame = {
+    val s = documents.sparkSession
     import s.implicits._
-    docs(s, d).select(col("doc_id"), col("source"), col("text"))
+    documents.select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, source, nullableText) =>
@@ -1638,9 +1610,10 @@ object TextOps {
       // the ~24 B/doc materialized blocks instead of re-tokenizing
       // the corpus text twice — at 100 TB the checkpoint is the
       // reduced projection, never the text
+      val src = docs(s, d)
       val t = {
         import s.implicits._
-        docs(s, d)
+        src
           .select(col("doc_id"), col("text")).as[(Long, String)]
           // JVM token count (== size(tokens(text))): the Catalyst
           // regex normalize dominated this query's wall at sf1
@@ -1657,7 +1630,7 @@ object TextOps {
       // and picks window+broadcast vs range+co-partitioned join)
       val (offPfx, smallOff) = graft.util.Prefix.cumExcl(s,
         t.groupBy("blk").agg(sum("n_tok").as("btot")), "blk", "btot", "sum",
-        cacheKey = Some(s"tx_token_shards:$d"))
+        cacheKey = Some("tx_token_shards" -> src))
       val offsets0 = offPfx.select(col("blk"), col("prefix").as("off"))
       val offsets = if (smallOff) broadcast(offsets0) else offsets0.hint("SHUFFLE_HASH")
       t.withColumn("lcum", sum("n_tok").over(local))
@@ -2480,19 +2453,19 @@ object TextOps {
       // cache(): the bench gram set feeds BOTH the bloom scalar
       // subquery and the exact-verify broadcast — without it the
       // typed gram pass runs twice (the subquery plans separately, so
-      // ReuseExchange can't dedupe it). CacheManager keys on the
-      // canonicalized plan, so repeated invocations share one entry.
-      // The view name is per-data-dir: a shared session running this
-      // query against two dirs concurrently must not race on one
-      // global view (the bloom would prune against the wrong bench).
-      val (bench, vname) = benchGramCache.getOrElseUpdate((sid(s), d), {
+      // ReuseExchange can't dedupe it). The view name is per-data-dir,
+      // so one session querying two dirs never prunes with the wrong
+      // bench.
+      val (bench, vname) = graft.util.SessionCache.withRelease[(DataFrame, String)](
+          s, "bench-grams", Seq(src),
+          { case (b, v) => b.unpersist(); s.catalog.dropTempView(v) }) {
         val b = gramHashes(s, src.filter(col("doc_id") < 10), 30)
           .toDF("bid", "gh").select("gh").distinct().cache()
         val v = "graft_bench_grams_" +
           graft.util.Hashing.md5Hex(d).substring(0, 8)
         b.createOrReplaceTempView(v)
         (b, v)
-      })
+      }
       gramHashes(s, src.filter(col("doc_id") >= 10), 30).toDF("doc_id", "gh")
         .where(expr(
           s"might_contain((SELECT bloom_filter_agg(gh) FROM $vname), gh)"))
@@ -3545,7 +3518,8 @@ object TextOps {
       // repeated nst subplans inside the one srcM materialization
       // (an explicit checkpoint here was measured 1.1 s SLOWER — the
       // eager job costs more than the reuse saves)
-      val nst = docTermCounts(s, d)
+      val corpus = docs(s, d)
+      val nst = docTermCounts(corpus)
         .filter(length(col("term")) >= 1)
         .groupBy("source", "term").agg(sum("tf").as("n_st"))
       val nt = nst.groupBy("term").agg(sum("n_st").as("n_t"))
@@ -3561,13 +3535,14 @@ object TextOps {
         .drop("num")
       // the loss table is a once-per-corpus model artifact (like the
       // BPE merge table): ONE corpus job collects the sources-sized
-      // frame, memoized per (session, dir); the K=4 reweighting
+      // frame, kept in the SessionCache; the K=4 reweighting
       // rounds are a driver-side loop over |sources| rows in exact
       // int64 arithmetic (the ann_kmeans/tx_bpe_merges discipline —
       // a relational formulation was measured at 4.2 s of pure tiny-
       // job scheduling for the same 20-row iteration)
-      val rows = srcLossCache.getOrElseUpdate((sid(s), d),
-        src.orderBy("source").localCheckpoint())
+      val rows = graft.util.SessionCache(s, "source-loss", Seq(corpus)) {
+        src.orderBy("source").localCheckpoint()
+      }
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       def divHalfUp(n: Long, dd: Long): Long = (2L * n + dd) / (2L * dd)
       val tt = rows.map(_._2).sum
@@ -3831,7 +3806,7 @@ object TextOps {
         .agg(count(lit(1)).as("n_common"))
       val wK = Window.partitionBy("source").orderBy("h")
       // |sources| rows × k longs — localCheckpoint materializes the
-      // sketch ONCE (the srcLossCache discipline for bounded frames);
+      // sketch ONCE (as pipeline_doremi_mix's loss table is);
       // without it the a/b sides of the pair cross each re-derive the
       // whole gram pipeline
       // no second distinct: g is already distinct (source, shingle),

@@ -18,30 +18,19 @@ import org.apache.spark.sql.expressions.Window
   */
 object Prefix {
 
-  /** Smallness verdicts memoized per (session UUID, caller key).
-    * The measure job is a fixed per-execution tax (r16 bench: +0.08 to
-    * +0.11 s per migrated query at sf0.1; ev_rfm_segments 8.1x at sf1)
-    * on data that is STATIC for the life of a bench/verify session, so
-    * callers reading a fixed directory pass a cache key (their dir) and
-    * pay the measure once per session. The cached value is only a path
-    * CHOICE — both prefix forms are exact — so a stale verdict can
-    * never produce a wrong answer, only a suboptimal plan; callers over
-    * growing inputs (streaming state) must NOT pass a key. Entries are
-    * single booleans keyed by session id: no resources to evict.
+  /** Smallness verdict of the frame named `name` over `input`, kept in
+    * the SessionCache: the measure job is a fixed per-execution tax
+    * (+0.08 to +0.11 s per query at sf0.1; ev_rfm_segments 8.1x at
+    * sf1), paid once per session while `input`'s files are unchanged.
+    * The verdict is only a path CHOICE — both prefix forms are exact.
+    * The configured row bound is part of the name, so a conf flip
+    * (PrefixSpec forcing the range path) re-measures instead of
+    * reading a verdict taken under a different bound.
     */
-  private val verdictCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Boolean]
-
-  /** Memoized smallness check: returns the cached verdict for
-    * (session, key) or runs `measure` and caches it. The configured
-    * row bound participates in the key, so a conf flip (PrefixSpec
-    * forcing the range path) re-measures instead of reading a verdict
-    * taken under a different bound.
-    */
-  def memoSmall(s: SparkSession, key: String)(measure: => Boolean): Boolean = {
+  def memoSmall(s: SparkSession, name: String, input: DataFrame)(
+      measure: => Boolean): Boolean = {
     val bound = graft.GraftConf.getLong(s, graft.GraftConf.PrefixBroadcastMaxRows)
-    val sid = org.apache.spark.sql.GraftSqlBridge.sessionUUID(s)
-    verdictCache.getOrElseUpdate((sid, s"$key#$bound"), measure)
+    SessionCache(s, s"$name#$bound", Seq(input))(measure)
   }
 
   /** Checked-bounded EXCLUSIVE prefix aggregate over a (key, value)
@@ -56,14 +45,13 @@ object Prefix {
     * join-back only when the check passed. `prefix` is 0 for the
     * first key under "sum" and null under "max".
     *
-    * `cacheKey`: callers over a STATIC input (a scale-factor dir)
-    * pass a stable key (query name + dir) to memoize the smallness
-    * verdict per session — on a hit the measure job (and, on the
-    * window path, the checkpoint that only existed to keep the
-    * measured frame from recomputing) is skipped entirely.
+    * `cacheKey`: (query name, the base read `df` derives from). The
+    * verdict is then memoized through `memoSmall`, and a hit skips
+    * the measure job. `df` itself cannot key the entry: it often sits
+    * on a fresh checkpoint and has no stable hash.
     */
   def cumExcl(s: SparkSession, df: DataFrame, kCol: String, vCol: String,
-      op: String, cacheKey: Option[String] = None): (DataFrame, Boolean) = {
+      op: String, cacheKey: Option[(String, DataFrame)] = None): (DataFrame, Boolean) = {
     def windowForm(in: DataFrame): DataFrame = {
       val w = Window.orderBy(kCol).rowsBetween(Window.unboundedPreceding, -1)
       val pfx = op match {
@@ -88,13 +76,10 @@ object Prefix {
     // downstream consumer.
     val ck = df.select(col(kCol).cast("long"), col(vCol).cast("long"))
       .localCheckpoint()
-    val bound = graft.GraftConf.getLong(s, graft.GraftConf.PrefixBroadcastMaxRows)
-    val sid = org.apache.spark.sql.GraftSqlBridge.sessionUUID(s)
-    val cached = cacheKey.flatMap(k => verdictCache.get((sid, s"$k#$bound")))
-    val small = cached.getOrElse {
-      val v = ck.count() <= bound
-      cacheKey.foreach(k => verdictCache.update((sid, s"$k#$bound"), v))
-      v
+    def measure = ck.count() <=
+      graft.GraftConf.getLong(s, graft.GraftConf.PrefixBroadcastMaxRows)
+    val small = cacheKey.fold(measure) { case (name, input) =>
+      memoSmall(s, name, input)(measure)
     }
     (if (small) windowForm(ck) else rangeForm(ck), small)
   }

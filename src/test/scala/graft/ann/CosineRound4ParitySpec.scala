@@ -24,7 +24,8 @@ class CosineRound4ParitySpec extends AnyFunSuite {
       (Seq(1.0, 0.0), Seq(0.0, 1.0)),   // exact 0 cosine
       (Seq(1.0, 1.0), Seq(1.0, 1.0)),   // exact 1
       (Seq(1.0, 0.0), Seq(-1.0, 1e-9)), // near −1
-      (Seq(1e-300, 0.0), Seq(1e-300, 1e-320))) // denormal norms
+      (Seq(1e-300, 0.0), Seq(1e-300, 1e-320)), // denormal norms
+      (Seq(0.0, 0.0), Seq(1.0, 2.0)))   // zero norm: 0/0 = NaN
     val df = pairs.toDF("a", "b")
     val got = df.select(
       round(call_function("cosine_sim", col("a"), col("b")), 4).as("expr"),
@@ -37,6 +38,16 @@ class CosineRound4ParitySpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(e),
         s"mismatch: expr=$e local=$local a=$a b=$b")
     }
+  }
+
+  test("probeOrder sorts (cid, score) like SQL ORDER BY score DESC, cid ASC") {
+    import spark.implicits._
+    val rows = Seq((3L, 0.5), (1L, Double.NaN), (0L, 0.0), (2L, -0.0),
+      (4L, 0.5), (5L, Double.NaN), (6L, -1.0), (7L, 1.0))
+    val sql = rows.toDF("cid", "score").orderBy(col("score").desc, col("cid").asc)
+      .collect().map(_.getLong(0)).toSeq
+    assert(rows.sorted(AnnOps.probeOrder).map(_._1) === sql)
+    assert(sql === Seq(1L, 5L, 7L, 3L, 4L, 0L, 2L, 6L))
   }
 
   test("round4Local matches round(_, 4) on HALF_UP boundaries and specials") {
