@@ -72,14 +72,10 @@ object Bench {
     val runnableStart = (0 until 5).map { i =>
       if (i > 0) Thread.sleep(400); runnableNow
     }.sorted.apply(1)
-    // min of 3 runs per query, every query (round-7 advisor item:
-    // min-of-2 left single-run scheduler outliers deciding recorded
-    // numbers — ev_filter_type read 1.21 s in r7 vs its steady 0.16 s,
-    // ann_kmeans 2.90 s at sf0.1 vs 1.26 s at sf1). The DuckDB
-    // baseline (tools/baseline_times.py) uses warmup + min, so min
-    // here keeps the side-by-side steady-state to steady-state; the
-    // per-query RELATIVE SPREAD across the runs is recorded for the
-    // slowest queries so artifact noise is visible in the artifact.
+    // min of 3 runs per query (min-of-2 let single scheduler outliers
+    // decide rows): the DuckDB baseline (tools/baseline_times.py) is
+    // warmup + min too; each query's relative spread across the runs
+    // is recorded so noise is visible in the artifact.
     val runsPerQuery = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
     // optional focus list (comma-separated query names) for profiling
     // single queries without paying the full-suite wall
@@ -89,13 +85,10 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
     }
-    // N consecutive runs per query plus one final round-robin sweep,
-    // min over N+1: the consecutive block keeps the warm steady state
-    // the DuckDB baseline (warmup+min) measures (full interleaving
-    // evicted JIT/codegen state, +30% per row), and the sweep sample,
-    // taken minutes later, rescues a query whose block was poisoned by
-    // one load/GC spike. Per-pass loadavg is recorded alongside. A
-    // query that throws in any run is listed in `failed` and left out
+    // N consecutive runs per query (full interleaving evicted JIT and
+    // codegen state, +30% per row) plus one final round-robin sweep
+    // that rescues a block poisoned by one load/GC spike; min over N+1.
+    // A query that throws in any run is listed in `failed` and left out
     // of every time, total and ratio below: it was never timed.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def once(n: String): Double = {

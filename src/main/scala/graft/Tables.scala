@@ -12,6 +12,11 @@ object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The table's files, freshly listed, as a column-less frame — no
+    * schema inference job: a cheap SessionCache input. */
+  def listing(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(new org.apache.spark.sql.types.StructType()).parquet(s"$dir/$name.parquet")
+
   /** A parquet file written as a single (or few) row groups caps scan
     * parallelism at its row-group count — this generator writes
     * single-row-group files for documents/events/embeddings, so any

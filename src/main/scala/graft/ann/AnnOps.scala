@@ -42,7 +42,7 @@ object AnnOps {
     * reports would all read.
     */
   private[graft] def protoAssign(s: SparkSession, d: String): DataFrame =
-    graft.util.SessionCache(s, "proto-assign", Seq(graft.Tables.read(s, d, "embeddings"))) {
+    graft.util.SessionCache(s, "proto-assign", Seq(graft.Tables.listing(s, d, "embeddings"))) {
       GraftFunctions.register(s)
       val c = corpus(s, d)
       val cents = broadcast(

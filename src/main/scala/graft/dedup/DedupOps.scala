@@ -422,7 +422,7 @@ object DedupOps {
     * table a dedup pipeline materializes once.
     */
   def winnowPairsMemo(s: SparkSession, d: String): DataFrame =
-    SessionCache.frame(s, "winnow-pairs", Seq(graft.Tables.read(s, d, "documents"))) {
+    SessionCache.frame(s, "winnow-pairs", Seq(graft.Tables.listing(s, d, "documents"))) {
       winnowCandidatePairs(s, docs(s, d)).persist()
     }
 

@@ -10,12 +10,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * (signature frames, candidate-pair tables, prefix-path verdicts).
   * An entry is keyed on the session, a name (carrying any parameter
   * the value depends on, e.g. the banding) and a snapshot of the
-  * input frames the caller passes, normally its base reads (a bare
-  * `Tables.read` where it has none of its own, so a hit costs one
-  * listing and no planning): each frame's analyzed-plan
-  * `semanticHash` (non-file leaves such as `LocalRelation` data, file
-  * relations' root paths) plus the sorted (path, length, modification
-  * time) of every file its file relations have listed.
+  * input frames the caller passes, normally its base reads
+  * (`Tables.listing` where it has none of its own, so a hit costs one
+  * listing): each frame's analyzed-plan `semanticHash` (non-file
+  * leaves such as `LocalRelation` data, file relations' root paths)
+  * plus the sorted (path, length, modification time) of every file
+  * its file relations have listed.
   *
   * Invalidation: an entry is served only while its inputs' files are
   * unchanged. A lookup matching an entry's session, name and plans but
