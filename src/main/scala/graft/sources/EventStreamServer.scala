@@ -1,218 +1,84 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
+import java.io.{BufferedOutputStream, BufferedReader, InputStreamReader, IOException,
+  OutputStreamWriter, PrintWriter}
 import java.net.{InetAddress, ServerSocket, Socket, SocketException}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
+import graft.events.ReflexPb
+import graft.util.ProtoWire
+import ServeLoop.closeQuietly
 
-/** Cross-service event streaming — the serving half (reference:
-  * server.go `reflex.NewServer` + `StreamFunc`; client.go consumes it;
-  * grpctest/stream exercises resume). The reference frames protobuf
-  * events over gRPC; here the same contract — "client presents a
-  * cursor, server streams every event after it, long-polling at the
-  * head" — is a one-request-line JSON protocol over a plain socket, so
-  * the consuming side stays the stock Spark socket source.
+/** Cross-service event streaming over a plain socket — the serving
+  * half (reference: server.go `reflex.NewServer` + `StreamFunc`;
+  * client.go consumes it; grpctest/stream exercises resume). The stream
+  * contract and its serving loop are [[ServeLoop]]'s, shared with
+  * [[GrpcEventServer]]; this class only parses the request and writes
+  * the events, in one of two socket protocols:
   *
-  * Protocol: the client sends ONE line `{"after": N, "toHead": B}`;
-  * the server replies with one wire-format event per line (see
-  * SocketEventSource.wireSchema) strictly in id order, starting after
-  * N. `toHead=true` closes at the head-at-connect (StreamToHead);
-  * otherwise the server polls the log and keeps streaming as events
-  * land (StreamFromHead semantics for N=head, plain Stream otherwise).
+  *  - lines (default): the client sends ONE line
+  *    `{"after": N, "toHead": B}` and gets one wire-format event per
+  *    line (SocketEventSource.wireSchema), so the consuming side stays
+  *    the stock Spark socket source;
+  *  - `binary = true`: the reference's message format — the client
+  *    sends ONE varint-delimited reflexpb.StreamRequest (with the
+  *    StreamOptions fromHead / toHead / lag) and gets varint-delimited
+  *    reflexpb.Event frames (graft.events.ReflexPb, byte-compatible with
+  *    the reference's generated code).
   *
-  * Scale note: serving is driver/control-plane by nature (the
-  * reference server is one process reading its own DB); each chunk is
-  * a pushed-down `id > cursor` range scan + `limit`, so a serve from
-  * a late cursor never rescans the whole log, and the per-connection
-  * state is one long.
+  * `watcher` is the wake-on-insert seam (reference
+  * rsql/eventstable.go:556): pass the served table's
+  * `EventsTable.watcher` and a head-parked connection wakes the instant
+  * an event is inserted instead of sleeping out `pollMs`.
   */
 class EventStreamServer(
     log: () => DataFrame,
     port: Int = 0,
     pollMs: Long = 100L,
     chunk: Int = 1024,
-    /** true → the reference's wire format: the client sends ONE
-      * varint-delimited reflexpb.StreamRequest, the server streams
-      * varint-delimited reflexpb.Event frames (graft.events.ReflexPb
-      * — byte-compatible with the reference's generated code). The
-      * gRPC/HTTP-2 transport itself stays out of scope; the MESSAGE
-      * layer is the real thing, including StreamOptions fromHead /
-      * toHead / lag.
-      */
     binary: Boolean = false,
-    /** wake-on-insert seam (reference rsql/eventstable.go:556): pass
-      * the served table's `EventsTable.watcher` and a head-parked
-      * connection wakes the instant an event is inserted instead of
-      * sleeping out `pollMs`.
-      */
     watcher: Option[graft.events.StreamWatcher] = None) extends AutoCloseable {
 
   private val server = new ServerSocket(port, 16, InetAddress.getLoopbackAddress)
   @volatile private var running = true
-
-  /** Park an idle serving loop: wake-on-insert when a watcher exists,
-    * plain long-poll sleep otherwise. `pre` is the epoch captured
-    * before the head check, so an insert during the check returns
-    * immediately (no lost wakeups).
-    */
-  private def park(pre: Long): Unit = watcher match {
-    case Some(w) => w.awaitNotify(pre, pollMs)
-    case None => Thread.sleep(pollMs)
-  }
-
-  /** Epoch to capture before a head check (0 when unwatched). Class
-    * level because the handlers shadow `watcher` with their peer-watch
-    * thread local.
-    */
-  private def watchEpoch: Long = watcher.fold(0L)(_.epoch)
+  private val loop = new ServeLoop(log, pollMs, chunk, watcher)
 
   /** Bound port (for port=0 ephemeral binds). */
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => handle(sock), s"event-stream-handler-$boundPort")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: SocketException => () // closed
-        case NonFatal(_) => ()
-      }
-    }
-  }, s"event-stream-server-$boundPort")
-  acceptor.setDaemon(true)
-  acceptor.start()
-
   private val AfterRe = """"after"\s*:\s*(-?\d+)""".r.unanchored
   private val ToHeadRe = """"toHead"\s*:\s*true""".r.unanchored
 
-  private def handle(sock: Socket): Unit =
-    if (binary) handlePb(sock) else handleLines(sock)
+  ServeLoop.accept(server, "event-stream", running)(handle)
 
-  /** Serve one reflexpb connection (see `binary`). Same loop shape as
-    * the line protocol: pushed-down `id > cursor` range scans, long
-    * poll at the head; StreamOptions differences — fromHead starts
-    * after the head-at-connect, lag holds back events younger than
-    * the lag window (options.go WithStreamLag).
-    */
-  private def handlePb(sock: Socket): Unit = {
+  private def handle(sock: Socket): Unit =
     try {
       val in = sock.getInputStream
-      val req = graft.util.ProtoWire.readDelimited(in)
-        .flatMap(graft.events.ReflexPb.decodeStreamRequest)
-      if (req.isEmpty) { sock.close(); return }
-      val out = new java.io.BufferedOutputStream(sock.getOutputStream)
-      val watcher = new Thread(() => {
-        try { in.read(); () } catch { case NonFatal(_) => () }
-        try sock.close() catch { case NonFatal(_) => () }
-      }, "event-stream-peer-watch")
-      watcher.setDaemon(true)
-      watcher.start()
-      var cursor = if (req.get.fromHead) headId() else req.get.after
-      val head = if (req.get.toHead) headId() else Long.MaxValue
-      val lagMs = req.get.lagMs
-      var done = cursor >= head
-      while (running && !done && !sock.isClosed) {
-        val preEpoch = watchEpoch
-        val frame = log()
-        val hasTrace = frame.columns.contains("trace")
-        val visible = frame.filter(col("id") > cursor && col("id") <= head)
-        val lagged =
-          if (lagMs > 0)
-            visible.filter(unix_millis(col("ts")) <=
-              System.currentTimeMillis() - lagMs)
-          else visible
-        val rows = lagged.orderBy("id").limit(chunk)
-          .select(col("id"), col("eventType"), col("foreignId"),
-            unix_millis(col("ts")).as("ts_ms"), col("value"), col("metadata"),
-            (if (hasTrace) col("trace") else lit(null).cast("binary")).as("trace"))
-          .collect()
-        if (rows.isEmpty) {
-          if (req.get.toHead) done = true
-          else park(preEpoch)
-        } else {
-          rows.foreach { r =>
-            graft.events.ReflexPb.writeEventTo(out, graft.events.ReflexPb.encodeEvent(
-              r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1),
-              r.getLong(2), r.getLong(3), r.getDouble(4),
-              if (r.isNullAt(5)) "" else r.getString(5),
-              if (r.isNullAt(6)) null else r.getAs[Array[Byte]](6)))
-          }
-          out.flush() // broken pipe surfaces as IOException → close below
-          cursor = rows.last.getLong(0)
-          if (cursor >= head) done = true
+      val req =
+        if (binary) ProtoWire.readDelimited(in).flatMap(ReflexPb.decodeStreamRequest)
+        else Option(new BufferedReader(new InputStreamReader(in, UTF_8)).readLine()).map { l =>
+          val after = l match { case AfterRe(n) => n.toLong; case _ => -1L }
+          ReflexPb.PbStreamRequest(after, ToHeadRe.matches(l), fromHead = false, lagMs = 0L)
+        }
+      req.foreach { r =>
+        ServeLoop.watchPeer(sock)
+        val out = new BufferedOutputStream(sock.getOutputStream)
+        val framing = if (binary) WireFraming.Pb else WireFraming.LineJson
+        loop.serve(r, framing, running && !sock.isClosed) { events =>
+          try {
+            events.foreach { e =>
+              if (binary) ProtoWire.writeDelimited(out, e)
+              else { out.write(e); out.write('\n') }
+            }
+            out.flush()
+            true
+          } catch { case _: IOException => false }
         }
       }
-      sock.close()
     } catch {
-      case _: InterruptedException | _: SocketException => ()
-      case NonFatal(_) => try sock.close() catch { case NonFatal(_) => () }
-    }
-  }
-
-  private def handleLines(sock: Socket): Unit = {
-    try {
-      val in = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
-      // Explicit UTF-8 (matches the reader and the Spark socket
-      // source's decode) — the PrintWriter default is the platform
-      // charset, which silently garbles non-ASCII fields elsewhere.
-      val out = new PrintWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), false)
-      val req = in.readLine()
-      if (req == null) { sock.close(); return }
-      var cursor = req match { case AfterRe(n) => n.toLong; case _ => -1L }
-      val toHead = ToHeadRe.matches(req)
-      // Peer-disconnect detection: sock.isClosed only sees LOCAL
-      // closes and PrintWriter swallows IOExceptions, so a dropped
-      // long-poll client would otherwise leak a handler thread
-      // running Spark jobs forever. The protocol is one request line
-      // then server→client only, so a blocking read() can return only
-      // on EOF/reset (or a protocol violation) — a zero-cost watcher
-      // that closes the socket, which both ends of the poll loop see.
-      val watcher = new Thread(() => {
-        try { sock.getInputStream.read(); () } catch { case NonFatal(_) => () }
-        try sock.close() catch { case NonFatal(_) => () }
-      }, "event-stream-peer-watch")
-      watcher.setDaemon(true)
-      watcher.start()
-      val head = if (toHead) headId() else Long.MaxValue
-      var done = cursor >= head
-      while (running && !done && !sock.isClosed) {
-        val preEpoch = watchEpoch
-        val rows = log()
-          .filter(col("id") > cursor && col("id") <= head)
-          .orderBy("id").limit(chunk)
-          .select(col("id"), col("eventType"), col("foreignId"),
-            unix_millis(col("ts")).as("ts_ms"), col("value"), col("metadata"))
-          .collect()
-        if (rows.isEmpty) {
-          if (toHead) done = true
-          else park(preEpoch)
-        } else {
-          rows.foreach { r => out.println(SocketEventSource.toWire(r)) }
-          out.flush()
-          // write failure (peer reset between watcher wake-ups)
-          if (out.checkError()) done = true
-          else {
-            cursor = rows.last.getLong(0)
-            if (cursor >= head) done = true
-          }
-        }
-      }
-      sock.close()
-    } catch {
-      case _: InterruptedException | _: SocketException => ()
-      case NonFatal(_) => try sock.close() catch { case NonFatal(_) => () }
-    }
-  }
-
-  private def headId(): Long = {
-    val r = log().agg(max("id")).collect()(0)
-    if (r.isNullAt(0)) -1L else r.getLong(0)
-  }
+      case NonFatal(_) | _: InterruptedException => ()
+    } finally closeQuietly(sock)
 
   override def close(): Unit = {
     running = false
@@ -221,235 +87,160 @@ class EventStreamServer(
 }
 
 /** The consuming half (reference client.go `StreamClient`): present
-  * the consumer's durable cursor to a remote EventStreamServer, then
-  * drive the standard transport-blind consume loop over what arrives.
+  * the consumer's durable cursor to a remote server, then drive the
+  * standard transport-blind consume loop over what arrives.
   *
-  * The Spark socket source is read-only, so the request line is sent
-  * by a thin relay: open the remote stream with `after`, forward its
-  * bytes to a loopback port, and point the socket source there.
-  * Everything downstream — parsing, filtering, the cursor protocol in
-  * Runner.runStreamFrom — is byte-identical to the local-bus path;
-  * the only new semantics is that filtering now ALSO happens
-  * server-side, so a resume never re-ships the consumed prefix (the
-  * property that matters when the log is 100 TB and the pipe is a
+  * The Spark socket source is read-only, so the request is sent by a
+  * thin relay: open the remote stream with `after`, forward its events
+  * as wire lines to a loopback port, and point the socket source
+  * there. Everything downstream — parsing, filtering, the cursor
+  * protocol in Runner.runStreamFrom — is byte-identical to the
+  * local-bus path; the only new semantics is that filtering now ALSO
+  * happens server-side, so a resume never re-ships the consumed prefix
+  * (the property that matters when the log is 100 TB and the pipe is a
   * network).
   */
 object EventStreamClient {
 
-  /** Open `Stream(after)` against a remote server and expose it on a
-    * loopback port for the Spark socket source.
+  private val IdRe = """"id"\s*:\s*(\d+)""".r.unanchored
+
+  /** Open `Stream(after)` against a remote line-protocol
+    * [[EventStreamServer]] and expose it on a loopback port for the
+    * Spark socket source.
     * @return (local port, closer)
     */
   def relay(host: String, port: Int, after: Long,
-      toHead: Boolean = false): (Int, () => Unit) = {
-    val local = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
-    val IdRe = """"id"\s*:\s*(\d+)""".r.unanchored
-    @volatile var closed = false
-    @volatile var liveRemote: Socket = null
-    // Accept loop, not a one-shot: the Spark socket source reconnects
-    // on query restart or task retry, and a dead relay would stall the
-    // stream silently. Each (re)connect opens a fresh remote stream,
-    // re-issuing the request from the last event id already forwarded
-    // — a reconnect resumes mid-stream without re-shipping the prefix,
-    // the same property the durable-cursor connect has.
-    val pump = new Thread(() => {
-      var cursor = after
-      try {
-        while (!closed) {
-          val sock = local.accept()
-          val remote = new Socket(host, port)
-          liveRemote = remote
-          try {
-            val req = new PrintWriter(new java.io.OutputStreamWriter(
-              remote.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), true)
-            req.println(s"""{"after":$cursor,"toHead":$toHead}""")
-            val in = new BufferedReader(
-              new InputStreamReader(remote.getInputStream, "UTF-8"))
-            val out = new PrintWriter(new java.io.OutputStreamWriter(
-              sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), false)
-            var line = in.readLine()
-            var dead = false
-            while (line != null && !dead) {
-              out.println(line)
-              out.flush()
-              if (out.checkError()) dead = true // local side hung up
-              else {
-                line match { case IdRe(n) => cursor = n.toLong; case _ => () }
-                line = in.readLine()
-              }
-            }
-          } finally {
-            liveRemote = null
-            try remote.close() catch { case NonFatal(_) => () }
-            try sock.close() catch { case NonFatal(_) => () }
-          }
+      toHead: Boolean = false): (Int, () => Unit) =
+    pump("event-stream-relay", after) { (cursor, onOpen, forward) =>
+      remote(host, port, onOpen) { sock =>
+        new PrintWriter(new OutputStreamWriter(sock.getOutputStream, UTF_8), true)
+          .println(s"""{"after":$cursor,"toHead":$toHead}""")
+        val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
+        Iterator.continually(in.readLine()).takeWhile(_ != null).forall { l =>
+          forward(l match { case IdRe(n) => n.toLong; case _ => cursor }, l)
         }
-      } catch {
-        case _: InterruptedException | _: SocketException => ()
-        case NonFatal(e) =>
-          if (!closed) System.err.println(s"[event-stream-relay] pump exited: $e")
       }
-    }, "event-stream-relay")
-    pump.setDaemon(true)
-    pump.start()
-    (local.getLocalPort, () => {
-      closed = true
-      val r = liveRemote
-      if (r != null) { try r.close() catch { case NonFatal(_) => () } }
-      try local.close() catch { case NonFatal(_) => () }
-    })
-  }
+    }
 
-  /** reflexpb-transport variant of `relay` — the moral equivalent of
+  /** `relay` over the reflexpb transport — the moral equivalent of
     * protocp.go streamClientFromProto: Recv varint-delimited
-    * reflexpb.Event frames from a `binary = true` EventStreamServer
-    * (or any reference-compatible peer), convert each
-    * (eventFromProto), and re-emit on the loopback line protocol for
-    * the stock Spark socket source. Reconnects re-issue the
-    * StreamRequest from the last forwarded event id, resuming
-    * mid-stream without re-shipping the prefix. The line hop drops
-    * the trace payload (wireSchema has no trace column); consumers
-    * that need spans read the log table, not the live relay.
+    * reflexpb.Event frames from a `binary = true` EventStreamServer (or
+    * any reference-compatible peer) and re-emit each as a wire line.
+    * The line hop drops the trace payload (wireSchema has no trace
+    * column); consumers that need spans read the log table, not the
+    * live relay.
     */
   def relayPb(host: String, port: Int, after: Long,
-      toHead: Boolean = false): (Int, () => Unit) = {
-    val local = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
-    @volatile var closed = false
-    @volatile var liveRemote: Socket = null
-    val pump = new Thread(() => {
-      var cursor = after
-      try {
-        while (!closed) {
-          val sock = local.accept()
-          val remote = new Socket(host, port)
-          liveRemote = remote
-          try {
-            val rout = remote.getOutputStream
-            graft.util.ProtoWire.writeDelimited(rout,
-              graft.events.ReflexPb.encodeStreamRequest(cursor, toHead = toHead))
-            rout.flush()
-            val rin = remote.getInputStream
-            val out = new PrintWriter(new java.io.OutputStreamWriter(
-              sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), false)
-            var ev = graft.events.ReflexPb.readEventFrom(rin)
-            var dead = false
-            while (ev.nonEmpty && !dead) {
-              val e = ev.get
-              out.println(SocketEventSource.toWire(
-                e.id, e.eventType, e.foreignId, e.tsMs, e.value, e.metadata))
-              out.flush()
-              if (out.checkError()) dead = true // local side hung up
-              else {
-                cursor = e.id
-                ev = graft.events.ReflexPb.readEventFrom(rin)
-              }
-            }
-          } finally {
-            liveRemote = null
-            try remote.close() catch { case NonFatal(_) => () }
-            try sock.close() catch { case NonFatal(_) => () }
-          }
-        }
-      } catch {
-        case _: InterruptedException | _: SocketException => ()
-        case NonFatal(e) =>
-          if (!closed) System.err.println(s"[event-stream-relay-pb] pump exited: $e")
+      toHead: Boolean = false): (Int, () => Unit) =
+    pump("event-stream-relay-pb", after) { (cursor, onOpen, forward) =>
+      remote(host, port, onOpen) { sock =>
+        val out = sock.getOutputStream
+        ProtoWire.writeDelimited(out, ReflexPb.encodeStreamRequest(cursor, toHead = toHead))
+        out.flush()
+        val in = sock.getInputStream
+        Iterator.continually(ReflexPb.readEventFrom(in)).takeWhile(_.nonEmpty)
+          .forall(e => forward(e.get.id, wire(e.get)))
       }
-    }, "event-stream-relay-pb")
-    pump.setDaemon(true)
-    pump.start()
-    (local.getLocalPort, () => {
-      closed = true
-      val r = liveRemote
-      if (r != null) { try r.close() catch { case NonFatal(_) => () } }
-      try local.close() catch { case NonFatal(_) => () }
-    })
-  }
+    }
 
-  /** gRPC-transport variant of `relay`: Recv events from a
+  /** `relay` over the gRPC transport: Recv events from a
     * [[GrpcEventServer]] (or any reference-compatible gRPC peer) over
-    * real HTTP/2 framing via [[GrpcEventClient]], and re-emit on the
-    * loopback line protocol for the stock Spark socket source.
-    * Reconnects re-issue Stream() from the last forwarded event id —
-    * resume without re-shipping the prefix, same as `relayPb`.
+    * real HTTP/2 framing via [[GrpcEventClient]].
     */
   def relayGrpc(host: String, port: Int, after: Long,
-      toHead: Boolean = false): (Int, () => Unit) = {
+      toHead: Boolean = false): (Int, () => Unit) =
+    pump("event-stream-relay-grpc", after) { (cursor, onOpen, forward) =>
+      GrpcEventClient.stream(host, port, cursor, toHead = toHead, onOpen = onOpen) { e =>
+        forward(e.id, wire(e))
+      }
+      ()
+    }
+
+  private def wire(e: ReflexPb.PbEvent): String =
+    SocketEventSource.toWire(e.id, e.eventType, e.foreignId, e.tsMs, e.value, e.metadata)
+
+  private def remote(host: String, port: Int, onOpen: Socket => Unit)(
+      body: Socket => Unit): Unit = {
+    val sock = new Socket(host, port)
+    onOpen(sock)
+    try body(sock) finally closeQuietly(sock)
+  }
+
+  /** The relay every transport shares. It accepts in a loop, not once:
+    * the Spark socket source reconnects on query restart or task
+    * retry, and a dead relay would stall the stream silently. Each
+    * local connection gets a fresh remote stream from the last event
+    * id already forwarded, so a reconnect resumes mid-stream without
+    * re-shipping the prefix. `stream(cursor, onOpen, forward)` opens
+    * the transport's stream after `cursor`, hands its socket to
+    * `onOpen` (the closer aborts a long poll through it) and calls
+    * `forward(id, wireLine)` per event until that returns false.
+    */
+  private def pump(name: String, after: Long)(
+      stream: (Long, Socket => Unit, (Long, String) => Boolean) => Unit): (Int, () => Unit) = {
     val local = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
     @volatile var closed = false
     @volatile var liveRemote: Socket = null
-    val pump = new Thread(() => {
+    ServeLoop.daemon(name) {
       var cursor = after
       try {
         while (!closed) {
           val sock = local.accept()
           try {
-            val out = new PrintWriter(new java.io.OutputStreamWriter(
-              sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), false)
-            GrpcEventClient.stream(host, port, cursor, toHead = toHead,
-              onOpen = s => liveRemote = s) { e =>
-              out.println(SocketEventSource.toWire(
-                e.id, e.eventType, e.foreignId, e.tsMs, e.value, e.metadata))
+            val out = new PrintWriter(new OutputStreamWriter(sock.getOutputStream, UTF_8), false)
+            stream(cursor, liveRemote = _, { (id, line) =>
+              out.println(line)
               out.flush()
-              if (out.checkError() || closed) false // local side hung up → RST
-              else { cursor = e.id; true }
-            }
-            ()
+              if (out.checkError() || closed) false // local side hung up
+              else { cursor = math.max(cursor, id); true }
+            })
           } catch {
             case NonFatal(_) if closed => ()
           } finally {
             liveRemote = null
-            try sock.close() catch { case NonFatal(_) => () }
+            closeQuietly(sock)
           }
         }
       } catch {
         case _: InterruptedException | _: SocketException => ()
-        case NonFatal(e) =>
-          if (!closed) System.err.println(s"[event-stream-relay-grpc] pump exited: $e")
+        case NonFatal(e) => if (!closed) System.err.println(s"[$name] pump exited: $e")
       }
-    }, "event-stream-relay-grpc")
-    pump.setDaemon(true)
-    pump.start()
+    }
     (local.getLocalPort, () => {
       closed = true
-      val r = liveRemote
-      if (r != null) { try r.close() catch { case NonFatal(_) => () } }
-      try local.close() catch { case NonFatal(_) => () }
+      Option(liveRemote).foreach(closeQuietly)
+      closeQuietly(local)
     })
   }
 
-  /** Consume a remote event stream with this consumer's own cursor
-    * store, resuming from the committed cursor (mid-stream, mid-log —
-    * wherever it points). Returns the running query and a closer that
-    * tears the transport down.
+  /** Consume a remote line-protocol event stream with this consumer's
+    * own cursor store, resuming from the committed cursor (mid-stream,
+    * mid-log — wherever it points). Returns the running query and a
+    * closer that tears the transport down.
     */
   def consume(
       spark: org.apache.spark.sql.SparkSession,
       host: String,
       port: Int,
       spec: graft.events.Spec,
-      checkpointDir: String): (org.apache.spark.sql.streaming.StreamingQuery, () => Unit) = {
-    val after = spec.store.get(spec.consumer.name).getOrElse(-1L)
-    val (localPort, closeRelay) = relay(host, port, after)
-    val q = graft.events.Runner.runStreamFrom(
-      SocketEventSource.stream(spark, "localhost", localPort), spec, checkpointDir,
-      availableNow = false)
-    (q, closeRelay)
-  }
+      checkpointDir: String): (org.apache.spark.sql.streaming.StreamingQuery, () => Unit) =
+    consumeVia(relay(host, port, _), spark, spec, checkpointDir)
 
-  /** `consume` over the gRPC transport: the standard durable-cursor
-    * consume loop (Runner.runStreamFrom + the consumer's own
-    * CursorStore) riding a [[GrpcEventServer]] peer via `relayGrpc` —
-    * the full client.go shape over the reference's actual transport.
+  /** `consume` over the gRPC transport: the full client.go shape over
+    * the reference's actual transport.
     */
   def consumeGrpc(
       spark: org.apache.spark.sql.SparkSession,
       host: String,
       port: Int,
       spec: graft.events.Spec,
+      checkpointDir: String): (org.apache.spark.sql.streaming.StreamingQuery, () => Unit) =
+    consumeVia(relayGrpc(host, port, _), spark, spec, checkpointDir)
+
+  private def consumeVia(relay: Long => (Int, () => Unit),
+      spark: org.apache.spark.sql.SparkSession, spec: graft.events.Spec,
       checkpointDir: String): (org.apache.spark.sql.streaming.StreamingQuery, () => Unit) = {
-    val after = spec.store.get(spec.consumer.name).getOrElse(-1L)
-    val (localPort, closeRelay) = relayGrpc(host, port, after)
+    val (localPort, closeRelay) = relay(spec.store.get(spec.consumer.name).getOrElse(-1L))
     val q = graft.events.Runner.runStreamFrom(
       SocketEventSource.stream(spark, "localhost", localPort), spec, checkpointDir,
       availableNow = false)

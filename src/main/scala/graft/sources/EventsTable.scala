@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,11 +11,20 @@ import graft.events.EventLog
   * rsql/eventstableint.go for int foreign ids).
   *
   * Spark-first mapping: the log is a parquet directory; an insert is
-  * one atomic append job (the file-commit protocol plays the role of
-  * the reference's SQL transaction — readers never see a partial
-  * batch). Ids are reserved as head+1..head+n and assigned with
+  * one append job. Ids are reserved as head+1..head+n and assigned with
   * zipWithIndex — per-partition offsets, no global sort, so an insert
   * of 10^9 rows assigns ids with one count and no shuffle.
+  *
+  * The append commits its parquet files one rename at a time, so a
+  * listing can catch an insert half-committed. After the append the
+  * insert therefore writes the committed head to a marker file in the
+  * table root (`_`-prefixed, which Spark's file index skips; written
+  * and renamed into place atomically), and readers take the marker
+  * BEFORE they list the directory and see only `id <= committed head`
+  * — never a partial batch (the role the reference's SQL transaction
+  * plays). The marker is also the head, so ids are never reused after
+  * `forget` drops the newest events. A log without a marker (written
+  * before it existed) reads every file and takes max(id) as its head.
   */
 final class EventsTable(spark: SparkSession, dir: String,
     /** partition the log by event date — at 100 TB this is what makes
@@ -120,38 +130,57 @@ final class EventsTable(spark: SparkSession, dir: String,
 
   def exists: Boolean = new java.io.File(dir).exists()
 
-  def log: EventLog = {
-    // explicit schema on BOTH paths (r13 schema evolution): a typed
-    // metadata projection added mid-log means old files lack the
-    // column — schema inference would surface whichever file's footer
-    // Spark samples, while an explicit schema reads every file with
-    // the merged shape (absent columns come back null until
-    // `evolve()` backfills them). The date partition column is named
-    // in the schema so partitioned reads stay prunable.
-    val df =
+  /** Committed-head marker in the table root (see the class comment). */
+  private val HeadMarker = "_graft_head"
+
+  /** The committed head, or None for a log without a marker. */
+  private def committedHead: Option[Long] =
+    try Some(Files.readString(Paths.get(dir, HeadMarker)).trim.toLong)
+    catch { case _: NoSuchFileException => None }
+
+  /** Atomically (re)write the committed-head marker of the table rooted
+    * at `root`.
+    */
+  private def writeHead(head: Long, root: String = dir): Unit = {
+    val tmp = Paths.get(root, HeadMarker + ".tmp")
+    Files.writeString(tmp, head.toString)
+    Files.move(tmp, Paths.get(root, HeadMarker), StandardCopyOption.ATOMIC_MOVE)
+    ()
+  }
+
+  /** Copy the marker into a staging directory that is about to replace
+    * the table root, so the swap keeps it.
+    */
+  private def carryHead(staging: String): Unit = committedHead.foreach(writeHead(_, staging))
+
+  /** The committed events with their canonical names. The schema is
+    * explicit on every path: a typed metadata projection added mid-log
+    * means old files lack the column, and schema inference would
+    * surface whichever file's footer Spark samples, while an explicit
+    * schema reads every file with the merged shape (absent columns come
+    * back null until `evolve()` backfills them). The date partition
+    * column is named in the schema so partitioned reads stay prunable.
+    */
+  private def read(keepDate: Boolean): DataFrame = {
+    val committed = committedHead // before the read lists the files
+    val df = canonicalize(
       if (partitionByDate)
         spark.read.schema(StructType(fullSchema.fields :+
-            StructField("date", DateType))).parquet(dir).drop("date")
-      else spark.read.schema(fullSchema).parquet(dir)
-    new EventLog(canonicalize(df), lookupLimit)
+          StructField("date", DateType))).parquet(dir)
+      else spark.read.schema(fullSchema).parquet(dir))
+    val visible = committed.fold(df)(h => df.filter(col("id") <= h))
+    if (partitionByDate && !keepDate) visible.drop("date") else visible
   }
+
+  def log: EventLog = new EventLog(read(keepDate = false), lookupLimit)
 
   /** Raw frame incl. the partition column (canonical event names) —
     * filter on `date` to see PartitionFilters pruning in the plan.
-    * Same explicit merged schema as log() (r13 ADVICE): on a mixed-era
-    * log where a typed metadata column was added mid-stream, schema
-    * inference surfaces the column only if Spark happens to sample a
-    * post-evolve footer; the explicit schema makes every read see the
-    * merged shape. The only difference from log() is the un-dropped
-    * partition column.
     */
-  def raw: DataFrame = canonicalize(
-    if (partitionByDate)
-      spark.read.schema(StructType(fullSchema.fields :+
-        StructField("date", DateType))).parquet(dir)
-    else spark.read.schema(fullSchema).parquet(dir))
+  def raw: DataFrame = read(keepDate = true)
 
-  def head: Long = if (!exists) -1L else log.head()
+  /** The committed head: the marker, else max(id); -1 for no log. */
+  def head: Long = committedHead.getOrElse(if (!exists) -1L else log.head())
 
   /** Right-to-be-forgotten compaction: rewrite the log without the
     * entity's events. Remaining ids are untouched (monotonicity
@@ -164,12 +193,18 @@ final class EventsTable(spark: SparkSession, dir: String,
     * never read or written (the date IN-list prunes the scan).
     * Unpartitioned logs fall back to a whole-directory atomic swap.
     * Concurrent readers see each partition old-or-new, never partial.
+    * Returns the head, which does not move.
     */
   def forget(foreignId: Long): Long = {
+    // Pinned before the rewrite: when the entity owns the newest events,
+    // max(id) drops, and a head read from it would hand their ids to the
+    // next insert — past the cursor of a consumer that already saw them.
+    val pinned = head
     if (partitionByDate) {
       val touched = raw.filter(col("foreignId") === foreignId)
         .select("date").distinct().collect().map(_.getDate(0)).toSeq
-      if (touched.isEmpty) return head
+      if (touched.isEmpty) return pinned
+      writeHead(pinned)
       val remaining = raw
         .filter(col("date").isin(touched: _*) && col("foreignId") =!= foreignId)
       val staging = dir + ".staging"
@@ -189,9 +224,10 @@ final class EventsTable(spark: SparkSession, dir: String,
       val tmp = dir + ".tmp"
       graft.util.AtomicDir.deleteRec(tmp)
       physicalize(remaining).write.mode(SaveMode.Overwrite).parquet(tmp)
+      writeHead(pinned, tmp)
       graft.util.AtomicDir.replace(tmp, dir)
     }
-    head
+    pinned
   }
 
   /** Small-file compaction (the OPTIMIZE step a streaming ingest needs
@@ -248,6 +284,7 @@ final class EventsTable(spark: SparkSession, dir: String,
         // drop the _SUCCESS marker so the swapped dir holds data files
         // only, like the append-written partitions it replaces
         fs.delete(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), false)
+        if (!partitionByDate) carryHead(staging.toUri.getPath)
         graft.util.AtomicDir.replace(staging.toUri.getPath, p.toUri.getPath)
         rewritten += 1
       }
@@ -304,6 +341,7 @@ final class EventsTable(spark: SparkSession, dir: String,
         graft.util.AtomicDir.deleteRec(staging.toUri.getPath)
         df.write.parquet(staging.toString)
         fs.delete(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), false)
+        if (!partitionByDate) carryHead(staging.toUri.getPath)
         graft.util.AtomicDir.replace(staging.toUri.getPath, p.toUri.getPath)
         rewritten += 1
       }
@@ -342,9 +380,9 @@ final class EventsTable(spark: SparkSession, dir: String,
     // new head = base + batch size; O(batch), not a re-scan of the
     // whole log (which made every single-row append O(log size)).
     val newHead = base + rdd.count()
+    writeHead(newHead) // the commit point
     // post-commit notify (the reference returns a NotifyFunc to call
-    // after tx commit — rsql/eventstable.go:245; here the parquet
-    // append above IS the commit, so this is the same point in time)
+    // after tx commit — rsql/eventstable.go:245)
     notifier.foreach(_.notifyInsert())
     newHead
   }

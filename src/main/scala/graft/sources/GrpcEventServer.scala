@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, InputStream, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.util.control.NonFatal
 import graft.util.{Hpack, Http2}
@@ -22,14 +21,16 @@ import graft.events.ReflexPb
   * SETTINGS handshake, HPACK-compressed HEADERS (incl. Huffman and
   * CONTINUATION), flow-controlled DATA, PING, RST_STREAM cancel.
   *
-  * Serving semantics are identical to
-  * [[EventStreamServer]]`(binary=true)` — cursor-pushdown range scans,
-  * long poll at the head, StreamOptions fromHead/toHead/lag — this
-  * class only swaps the socket framing for HTTP/2. Scale note: the
-  * data plane stays per-event-small and driver/control-plane by
-  * nature (one process serving its own log, as in the reference); the
-  * 100 TB path is consumers resuming from durable cursors so the log
-  * is never re-shipped.
+  * The stream itself — cursor, StreamOptions fromHead/toHead/lag,
+  * chunked range scans, parking at the head — is [[ServeLoop]]'s, the
+  * same loop [[EventStreamServer]] runs; this class supplies the HTTP/2
+  * connection, the StreamRequest from the stream's DATA, and a sink that
+  * sends each chunk of gRPC-framed reflexpb.Events as one flow-controlled
+  * DATA write, then `grpc-status` trailers. Scale note: the data plane
+  * stays per-event-small and driver/control-plane by nature (one
+  * process serving its own log, as in the reference); the 100 TB path
+  * is consumers resuming from durable cursors so the log is never
+  * re-shipped.
   */
 class GrpcEventServer(
     log: () => DataFrame,
@@ -49,15 +50,6 @@ class GrpcEventServer(
       */
     watcher: Option[graft.events.StreamWatcher] = None) extends AutoCloseable {
 
-  /** Park an idle serving loop: wake-on-insert when watched, plain
-    * long-poll sleep otherwise; `pre` is captured before the head
-    * check so a concurrent insert returns immediately.
-    */
-  private def park(pre: Long): Unit = watcher match {
-    case Some(w) => w.awaitNotify(pre, pollMs)
-    case None => Thread.sleep(pollMs)
-  }
-
   private val server: ServerSocket = sslContext match {
     case None => new ServerSocket(port, 16, InetAddress.getLoopbackAddress)
     case Some(ctx) =>
@@ -70,30 +62,17 @@ class GrpcEventServer(
       ss
   }
   @volatile private var running = true
+  private val loop = new ServeLoop(log, pollMs, chunk, watcher)
 
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => handleConn(sock), s"grpc-conn-$boundPort")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: SocketException => ()
-        case NonFatal(_) => ()
-      }
-    }
-  }, s"grpc-server-$boundPort")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  ServeLoop.accept(server, "grpc", running)(handleConn)
 
   /** Per-stream state. Flow-control fields are guarded by the owning
     * connection's `flow` lock.
     */
   private final class StreamState(val id: Int) {
-    val reqBuf = new java.io.ByteArrayOutputStream(64)
+    val reqBuf = new ByteArrayOutputStream(64)
     var window: Int = Http2.DefaultWindow
     @volatile var cancelled = false
     var started = false
@@ -133,7 +112,7 @@ class GrpcEventServer(
       // on the connection per RFC 7540 §4.3 — no interleaving)
       var pendingSid = 0
       var pendingEndStream = false
-      val pendingBlock = new java.io.ByteArrayOutputStream(256)
+      val pendingBlock = new ByteArrayOutputStream(256)
       var inHeaders = false
 
       def dispatchHeaders(sid: Int, endStream: Boolean, block: Array[Byte]): Unit =
@@ -152,7 +131,7 @@ class GrpcEventServer(
             if (path != "/reflexpb.Reflex/Stream") {
               // gRPC maps unknown methods to status 12 UNIMPLEMENTED in
               // trailers (transport-level 200 stays)
-              respondUnimplemented(conn, sid)
+              respondStatus(conn, sid, 12, "unknown method")
               conn.flow.synchronized { conn.streams.remove(sid); () }
             } else if (endStream) {
               // no request message: INTERNAL
@@ -211,18 +190,9 @@ class GrpcEventServer(
             conn.flow.synchronized(conn.streams.get(f.streamId)) match {
               case Some(st) if !st.started =>
                 st.reqBuf.write(body)
-                val buf = st.reqBuf.toByteArray
-                if (buf.length >= 5) {
-                  val msgLen = ((buf(1) & 0xff) << 24) | ((buf(2) & 0xff) << 16) |
-                    ((buf(3) & 0xff) << 8) | (buf(4) & 0xff)
-                  if (buf.length >= 5 + msgLen) {
-                    st.started = true
-                    val msg = java.util.Arrays.copyOfRange(buf, 5, 5 + msgLen)
-                    val t = new Thread(() => serveStream(conn, st, msg),
-                      s"grpc-stream-${f.streamId}")
-                    t.setDaemon(true)
-                    t.start()
-                  }
+                GrpcMessage.next(st.reqBuf.toByteArray, 0).foreach { msg =>
+                  st.started = true
+                  ServeLoop.daemon(s"grpc-stream-${f.streamId}")(serveStream(conn, st, msg))
                 }
               case _ => () // late DATA on a finished/cancelled stream
             }
@@ -242,16 +212,6 @@ class GrpcEventServer(
       case _: SocketException | _: InterruptedException => ()
       case NonFatal(_) => try sock.close() catch { case NonFatal(_) => () }
     }
-  }
-
-  private def grpcFrame(msg: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](5 + msg.length)
-    out(1) = ((msg.length >>> 24) & 0xff).toByte
-    out(2) = ((msg.length >>> 16) & 0xff).toByte
-    out(3) = ((msg.length >>> 8) & 0xff).toByte
-    out(4) = (msg.length & 0xff).toByte
-    System.arraycopy(msg, 0, out, 5, msg.length)
-    out
   }
 
   /** Send DATA respecting both flow-control windows, fragmenting to
@@ -290,19 +250,11 @@ class GrpcEventServer(
       Hpack.encode(hs))
   }
 
-  private def respondUnimplemented(conn: Conn, sid: Int): Unit = {
-    respHeaders(conn, sid)
-    trailers(conn, sid, 12, "unknown method")
-  }
-
   private def respondStatus(conn: Conn, sid: Int, status: Int, msg: String): Unit = {
     respHeaders(conn, sid)
     trailers(conn, sid, status, msg)
   }
 
-  /** The serving loop — semantics of EventStreamServer.handlePb with
-    * gRPC DATA/trailers as the sink.
-    */
   private def serveStream(conn: Conn, st: StreamState, reqMsg: Array[Byte]): Unit = {
     try {
       ReflexPb.decodeStreamRequest(reqMsg) match {
@@ -310,43 +262,12 @@ class GrpcEventServer(
           respondStatus(conn, st.id, 3, "malformed StreamRequest") // INVALID_ARGUMENT
         case Some(req) =>
           respHeaders(conn, st.id)
-          var cursor = if (req.fromHead) headId() else req.after
-          val head = if (req.toHead) headId() else Long.MaxValue
-          var done = cursor >= head
-          var ok = true
-          while (running && ok && !done && !conn.closed && !st.cancelled) {
-            val preEpoch = watcher.fold(0L)(_.epoch)
-            val frame = log()
-            val hasTrace = frame.columns.contains("trace")
-            val visible = frame.filter(col("id") > cursor && col("id") <= head)
-            val lagged =
-              if (req.lagMs > 0)
-                visible.filter(unix_millis(col("ts")) <=
-                  System.currentTimeMillis() - req.lagMs)
-              else visible
-            val rows = lagged.orderBy("id").limit(chunk)
-              .select(col("id"), col("eventType"), col("foreignId"),
-                unix_millis(col("ts")).as("ts_ms"), col("value"), col("metadata"),
-                (if (hasTrace) col("trace") else lit(null).cast("binary")).as("trace"))
-              .collect()
-            if (rows.isEmpty) {
-              if (req.toHead) done = true
-              else park(preEpoch)
-            } else {
-              val batch = new java.io.ByteArrayOutputStream(rows.length * 64)
-              rows.foreach { r =>
-                batch.write(grpcFrame(ReflexPb.encodeEvent(
-                  r.getLong(0), if (r.isNullAt(1)) "" else r.getString(1),
-                  r.getLong(2), r.getLong(3), r.getDouble(4),
-                  if (r.isNullAt(5)) "" else r.getString(5),
-                  if (r.isNullAt(6)) null else r.getAs[Array[Byte]](6))))
-              }
-              ok = sendData(conn, st, batch.toByteArray)
-              if (ok) {
-                cursor = rows.last.getLong(0)
-                if (cursor >= head) done = true
-              }
-            }
+          // one DATA write per chunk, not per event
+          val ok = loop.serve(req, WireFraming.Pb, running && !conn.closed && !st.cancelled) {
+            events =>
+              val batch = new ByteArrayOutputStream(events.length * 64)
+              events.foreach(GrpcMessage.write(batch, _))
+              sendData(conn, st, batch.toByteArray)
           }
           if (ok && !conn.closed && !st.cancelled) trailers(conn, st.id, 0)
       }
@@ -359,15 +280,32 @@ class GrpcEventServer(
     }
   }
 
-  private def headId(): Long = {
-    val r = log().agg(max("id")).collect()(0)
-    if (r.isNullAt(0)) -1L else r.getLong(0)
-  }
-
   override def close(): Unit = {
     running = false
     server.close()
   }
+}
+
+/** gRPC message framing (the gRPC HTTP/2 protocol's
+  * Length-Prefixed-Message): a compressed-flag octet (always 0 here),
+  * a 4-octet big-endian length, then the message.
+  */
+private[sources] object GrpcMessage {
+
+  def write(out: OutputStream, msg: Array[Byte]): Unit = {
+    out.write(0)
+    out.write(java.nio.ByteBuffer.allocate(4).putInt(msg.length).array())
+    out.write(msg)
+  }
+
+  /** The message framed at `off` in `buf`, or None while it is incomplete. */
+  def next(buf: Array[Byte], off: Int): Option[Array[Byte]] =
+    if (buf.length - off < 5) None
+    else {
+      val len = java.nio.ByteBuffer.wrap(buf).getInt(off + 1)
+      if (buf.length - off - 5 < len) None
+      else Some(java.util.Arrays.copyOfRange(buf, off + 5, off + 5 + len))
+    }
 }
 
 /** Minimal gRPC client for `Reflex/Stream` over h2c prior-knowledge —
@@ -418,19 +356,14 @@ object GrpcEventClient {
         ":method" -> "POST", ":scheme" -> "http",
         ":path" -> "/reflexpb.Reflex/Stream", ":authority" -> s"$host:$port",
         "content-type" -> "application/grpc", "te" -> "trailers")))
-      val req = ReflexPb.encodeStreamRequest(after, toHead = toHead,
-        fromHead = fromHead, lagMs = lagMs)
-      val framed = new Array[Byte](5 + req.length)
-      framed(1) = ((req.length >>> 24) & 0xff).toByte
-      framed(2) = ((req.length >>> 16) & 0xff).toByte
-      framed(3) = ((req.length >>> 8) & 0xff).toByte
-      framed(4) = (req.length & 0xff).toByte
-      System.arraycopy(req, 0, framed, 5, req.length)
-      Http2.writeFrame(out, Http2.Data, Http2.FlagEndStream, 1, framed)
+      val framed = new ByteArrayOutputStream()
+      GrpcMessage.write(framed, ReflexPb.encodeStreamRequest(after, toHead = toHead,
+        fromHead = fromHead, lagMs = lagMs))
+      Http2.writeFrame(out, Http2.Data, Http2.FlagEndStream, 1, framed.toByteArray)
       out.flush()
 
       val hpackIn = new Hpack.Decoder()
-      val msgBuf = new java.io.ByteArrayOutputStream(1024)
+      val msgBuf = new ByteArrayOutputStream(1024)
       var status = -1
       var message = ""
       var sawResponseHeaders = false
@@ -475,25 +408,18 @@ object GrpcEventClient {
                 out.flush()
               }
               // de-frame complete gRPC messages
-              var buf = msgBuf.toByteArray
+              val buf = msgBuf.toByteArray
               var consumed = 0
-              var continue = true
-              while (continue && buf.length - consumed >= 5) {
-                val base = consumed
-                val len = ((buf(base + 1) & 0xff) << 24) | ((buf(base + 2) & 0xff) << 16) |
-                  ((buf(base + 3) & 0xff) << 8) | (buf(base + 4) & 0xff)
-                if (buf.length - base - 5 < len) continue = false
-                else {
-                  consumed = base + 5 + len
-                  val ev = ReflexPb.decodeEvent(
-                    java.util.Arrays.copyOfRange(buf, base + 5, consumed))
-                  if (ev.exists(e => !f(e))) { // caller cancel
-                    Http2.writeFrame(out, Http2.RstStream, 0, 1,
-                      Http2.rstPayload(Http2.ErrCancel))
-                    out.flush()
-                    return Result(0, "cancelled by caller")
-                  }
+              var msg = GrpcMessage.next(buf, consumed)
+              while (msg.nonEmpty) {
+                consumed += 5 + msg.get.length
+                if (ReflexPb.decodeEvent(msg.get).exists(e => !f(e))) { // caller cancel
+                  Http2.writeFrame(out, Http2.RstStream, 0, 1,
+                    Http2.rstPayload(Http2.ErrCancel))
+                  out.flush()
+                  return Result(0, "cancelled by caller")
                 }
+                msg = GrpcMessage.next(buf, consumed)
               }
               if (consumed > 0) {
                 msgBuf.reset()

@@ -30,7 +30,8 @@ trait WireFraming extends Serializable {
   def decode(raw: DataFrame): DataFrame
 
   /** producer side: one canonical (id, eventType, foreignId, ts_ms,
-    * value, metadata) row → payload record. */
+    * value, metadata) row → payload record. A framing that carries
+    * traces also reads a seventh `trace` column when the row has one. */
   def encode(r: Row): Array[Byte]
 }
 
@@ -90,7 +91,8 @@ object WireFraming {
         if (r.isNullAt(2)) 0L else r.getLong(2),
         if (r.isNullAt(3)) 0L else r.getLong(3),
         if (r.isNullAt(4)) 0.0 else r.getDouble(4),
-        if (r.isNullAt(5)) null else r.getString(5))
+        if (r.isNullAt(5)) null else r.getString(5),
+        if (r.length > 6 && !r.isNullAt(6)) r.getAs[Array[Byte]](6) else null)
   }
 
   /** Length-prefixed JSON — a Kafka-shaped RECORD framing: each

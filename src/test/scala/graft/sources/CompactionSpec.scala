@@ -42,6 +42,8 @@ class CompactionSpec extends AnyFunSuite {
     assert(n === 1)
     assert(parquetFiles(dir).size === 1)
     assert(table.head === headBefore)
+    // the swap keeps the committed-head marker
+    assert(new java.io.File(dir, "_graft_head").exists)
     assert(table.log.df.collect().toSet === before)
     // replay across the swap: identical post-cursor stream
     assert(table.log.after(cursor).orderBy("id").collect().toSeq === tailBefore)

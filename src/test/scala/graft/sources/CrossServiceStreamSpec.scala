@@ -1,10 +1,12 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.TestSpark
-import graft.events.{Consumer, MemCursorStore, Runner, Spec}
+import graft.events.{Consumer, MemCursorStore, ReflexPb, Runner, Spec}
+import graft.util.ProtoWire
 
 /** Cross-service streaming parity (reference: server.go serves
   * StreamFunc over gRPC, client.go consumes with its own cursor,
@@ -16,14 +18,96 @@ import graft.events.{Consumer, MemCursorStore, Runner, Spec}
 class CrossServiceStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def mkTable(n: Int): EventsTable = {
-    val dir = Files.createTempDirectory("graft-xsvc").resolve("log").toString
+  private def mkTable(n: Int, dir: String =
+      Files.createTempDirectory("graft-xsvc").resolve("log").toString): EventsTable = {
     val table = new EventsTable(spark, dir)
-    import spark.implicits._
-    table.insert((0 until n).map { i =>
-      ("click", (i % 3).toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), 1.0, "{}")
-    }.toDF("eventType", "foreignId", "ts", "value", "metadata"))
+    insert(table, n)
     table
+  }
+
+  private def insert(table: EventsTable, n: Int,
+      ts: Int => java.sql.Timestamp = i =>
+        java.sql.Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00")): Unit = {
+    import spark.implicits._
+    table.insert((0 until n).map(i => ("click", (i % 3).toLong, ts(i), 1.0, "{}"))
+      .toDF("eventType", "foreignId", "ts", "value", "metadata"))
+    ()
+  }
+
+  /** Bound on every blocking read of a stream in these specs. */
+  private val WaitMs = 20000
+
+  /** One transport: a server over `log` (chunk 2, so a stream takes
+    * several chunks) and a client that reads ids in arrival order, at
+    * most `max` of them, plus the end status (gRPC's; 0 for a socket).
+    */
+  private case class Transport(name: String,
+      serve: (() => DataFrame) => (AutoCloseable, Int),
+      read: (Int, ReflexPb.PbStreamRequest, Int) => (Seq[Long], Int))
+
+  private def req(after: Long, toHead: Boolean = false, fromHead: Boolean = false,
+      lagMs: Long = 0L) = ReflexPb.PbStreamRequest(after, toHead, fromHead, lagMs)
+
+  private def onSocket(port: Int)(io: java.net.Socket => Seq[Long]): (Seq[Long], Int) = {
+    val sock = new java.net.Socket("localhost", port)
+    sock.setSoTimeout(WaitMs)
+    try (io(sock), 0) finally sock.close()
+  }
+
+  private val lineT = Transport("line",
+    log => { val s = new EventStreamServer(log, pollMs = 20L, chunk = 2); (s, s.boundPort) },
+    (port, r, max) => onSocket(port) { sock =>
+      new java.io.PrintWriter(sock.getOutputStream, true)
+        .println(s"""{"after":${r.after},"toHead":${r.toHead}}""")
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+      Iterator.continually(in.readLine()).takeWhile(_ != null).take(max)
+        .map(l => """"id":(\d+)""".r.findFirstMatchIn(l).get.group(1).toLong).toSeq
+    })
+
+  private val pbT = Transport("reflexpb",
+    log => {
+      val s = new EventStreamServer(log, pollMs = 20L, chunk = 2, binary = true)
+      (s, s.boundPort)
+    },
+    (port, r, max) => onSocket(port) { sock =>
+      ProtoWire.writeDelimited(sock.getOutputStream, ReflexPb.encodeStreamRequest(
+        r.after, toHead = r.toHead, fromHead = r.fromHead, lagMs = r.lagMs))
+      sock.getOutputStream.flush()
+      Iterator.continually(ReflexPb.readEventFrom(sock.getInputStream))
+        .takeWhile(_.nonEmpty).take(max).map(_.get.id).toSeq
+    })
+
+  private val grpcT = Transport("gRPC",
+    log => { val s = new GrpcEventServer(log, pollMs = 20L, chunk = 2); (s, s.boundPort) },
+    (port, r, max) => {
+      val ids = Seq.newBuilder[Long]
+      var n = 0
+      val res = GrpcEventClient.stream("localhost", port, r.after, toHead = r.toHead,
+          fromHead = r.fromHead, lagMs = r.lagMs, onOpen = _.setSoTimeout(WaitMs)) { e =>
+        ids += e.id
+        n += 1
+        n < max
+      }
+      (ids.result(), res.grpcStatus)
+    })
+
+  private def serving[T](t: Transport, log: () => DataFrame)(f: Int => T): T = {
+    val (server, port) = t.serve(log)
+    try f(port) finally server.close()
+  }
+
+  /** `table.log.df` that runs `sideEffect` once, on read number `at`
+    * (read 1 is the server's head snapshot), after that read has listed
+    * the log — so the effect shows from the next read on.
+    */
+  private def effectOnRead(table: EventsTable, at: Int)(sideEffect: => Unit): () => DataFrame = {
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    () => {
+      val df = table.log.df
+      if (reads.incrementAndGet() == at) sideEffect
+      df
+    }
   }
 
   test("wire protocol: Stream(after, toHead) serves only events past the cursor, in id order") {
@@ -48,11 +132,19 @@ class CrossServiceStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-xsvc-null").resolve("log").toString
     val table = new EventsTable(spark, dir)
     import spark.implicits._
-    // value / metadata / eventType all null on one event
+    // eventType / foreignId / value / metadata all null on the middle event
     table.insert(Seq(
-      (Some("click"), 1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Some(1.0), Some("{}")),
-      (None, 2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), None, None))
+      (Some("click"), Some(1L), java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Some(1.0), Some("{}")),
+      (None, None, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), None, None),
+      (Some("click"), Some(3L), java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), Some(3.0), Some("{}")))
       .toDF("eventType", "foreignId", "ts", "value", "metadata"))
+    for (t <- Seq(lineT, pbT, grpcT)) {
+      val (ids, status) = serving(t, () => table.log.df) {
+        t.read(_, req(-1L, toHead = true), Int.MaxValue)
+      }
+      assert(ids === Seq(0L, 1L, 2L), s"${t.name}: a null-field event must not end the stream")
+      assert(status === 0, t.name)
+    }
     val server = new EventStreamServer(() => table.log.df)
     try {
       val sock = new java.net.Socket("localhost", server.boundPort)
@@ -62,16 +154,78 @@ class CrossServiceStreamSpec extends AnyFunSuite {
         new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
       val lines = Iterator.continually(in.readLine()).takeWhile(_ != null).toSeq
       sock.close()
-      assert(lines.size === 2, s"null-field event must not kill the stream: $lines")
+      assert(lines.size === 3, lines)
       // round-trip: the null-field line parses to a row with nulls, id intact
       val parsed = Seq(lines(1)).toDF("value")
         .select(org.apache.spark.sql.functions.from_json(
           org.apache.spark.sql.functions.col("value"),
           SocketEventSource.wireSchema).as("e"))
-        .select("e.id", "e.eventType", "e.value", "e.metadata").collect()(0)
+        .select("e.id", "e.eventType", "e.value", "e.metadata", "e.foreignId").collect()(0)
       assert(parsed.getLong(0) === 1L)
-      assert(parsed.isNullAt(1) && parsed.isNullAt(2) && parsed.isNullAt(3))
+      assert((1 to 4).forall(parsed.isNullAt))
     } finally server.close()
+  }
+
+  test("stream options over reflexpb and gRPC: fromHead, toHead, lagMs") {
+    for (t <- Seq(pbT, grpcT)) {
+      val table = mkTable(5) // ids 0..4
+      // fromHead: the log is skipped; two events inserted after the head
+      // snapshot arrive
+      val fromHead = serving(t, effectOnRead(table, 2)(insert(table, 2))) {
+        t.read(_, req(-1L, fromHead = true), 2)._1
+      }
+      assert(fromHead === Seq(5L, 6L), t.name)
+      // toHead: the stream ends at the head as it was at connect, though
+      // two more events land while it runs
+      val (toHead, status) = serving(t, effectOnRead(table, 2)(insert(table, 2))) {
+        t.read(_, req(-1L, toHead = true), Int.MaxValue)
+      }
+      assert(toHead === (0L to 6L), t.name)
+      assert(status === 0, t.name)
+      assert(table.head === 8L)
+      // lagMs: events younger than the lag are held back
+      insert(table, 2, _ => new java.sql.Timestamp(System.currentTimeMillis()))
+      val lagged = serving(t, () => table.log.df) {
+        t.read(_, req(-1L, toHead = true, lagMs = 3600000L), Int.MaxValue)._1
+      }
+      assert(lagged === (0L to 8L), t.name)
+    }
+  }
+
+  test("an insert caught mid-commit stays invisible until its head marker is written") {
+    val dir = Files.createTempDirectory("graft-xsvc-midcommit").resolve("log").toString
+    val table = mkTable(5, dir) // ids 0..4, committed head 4
+    // a later insert half-way through: its parquet file (ids 5..7) is in
+    // the log directory, its committed-head marker not yet written
+    val staged = Files.createTempDirectory("graft-xsvc-staged").resolve("part").toString
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 01:00:00")
+    spark.createDataFrame(java.util.Arrays.asList((5L to 7L).map(i =>
+      Row(i, "late", 9L, ts, 1.0, "{}", null)): _*), table.schema)
+      .coalesce(1).write.parquet(staged)
+    Files.list(Paths.get(staged)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(f => Files.move(f, Paths.get(dir, f.getFileName.toString)))
+
+    val store = new MemCursorStore()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def drain(): Runner.RunResult = Runner.runToHead(Spec(table.log, store,
+      Consumer("mid-commit", b => b.select("id").collect().foreach(r => seen.add(r.getLong(0))))))
+    def served(after: Long): Seq[(String, Seq[Long])] = Seq(lineT, pbT, grpcT).map { t =>
+      t.name -> serving(t, () => table.log.df)(t.read(_, req(after, toHead = true), Int.MaxValue)._1)
+    }
+
+    assert(drain().finalCursor === 4L)
+    assert(seen.asScala.toSeq.sorted === (0L to 4L))
+    assert(store.get("mid-commit") === Some(4L))
+    assert(Runner.lag(table.log, store, "mid-commit")._1 === 0L)
+    served(-1L).foreach { case (name, ids) => assert(ids === (0L to 4L), name) }
+
+    // the insert commits
+    Files.writeString(Paths.get(dir, "_graft_head"), "7")
+    assert(Runner.lag(table.log, store, "mid-commit")._1 === 3L)
+    assert(drain().finalCursor === 7L)
+    assert(seen.asScala.toSeq.sorted === (0L to 7L), "each event exactly once")
+    served(4L).foreach { case (name, ids) => assert(ids === (5L to 7L), name) }
   }
 
   test("watched server wakes a head-parked connection on insert, not pollMs later") {

@@ -46,6 +46,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val post = v1.log.df
     assert(post.count() === 40)
     assert(v1.head === 39L) // ids 0..39: genesis head is -1
+    assert(new java.io.File(dir, "_graft_head").exists) // kept by the swap
     assert(post.filter(col("meta_plan") =!=
       get_json_object(col("metadata"), "$.plan")).count() === 0)
     assert(post.filter(col("meta_plan") === "pro").count() === 20)
@@ -61,10 +62,12 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       assert(spark.read.parquet(f.getPath.toString)
         .schema.fieldNames.contains("meta_plan"), f.getPath.getName)
     }
-    // and the filter is pushed to the scan
+    // and the filter is pushed to the scan, beside the read's
+    // committed-head bound (id <= 39)
     val plan = post.filter(col("meta_plan") === "pro")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(meta_plan), EqualTo(meta_plan,pro)]"), plan.take(600))
+    assert(plan.contains("PushedFilters: [IsNotNull(id), IsNotNull(meta_plan), " +
+      "LessThanOrEqual(id,39), EqualTo(meta_plan,pro)]"), plan.take(600))
   }
 
   test("date-partitioned log: evolve rewrites ONLY the pre-column partitions") {

@@ -225,6 +225,32 @@ class SourcesSpec extends AnyFunSuite {
     assert(res.finalCursor === 29L)
   }
 
+  test("forget of the newest entity keeps the head: ids are never reused") {
+    import spark.implicits._
+    def events(fids: Long*) = fids.map(f =>
+      ("click", f, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0, "{}"))
+      .toDF("eventType", "foreignId", "ts", "value", "metadata")
+    for (partitioned <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-forget-head").resolve("log").toString
+      val table = new EventsTable(spark, dir, partitionByDate = partitioned)
+      table.insert(events(1L, 2L, 3L)) // ids 0..2
+      val store = new MemCursorStore()
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      def drain(): Unit = {
+        Runner.runToHead(graft.events.Spec(table.log, store, Consumer("at-head",
+          b => seen ++= b.select("foreignId").collect().map(_.getLong(0)))))
+        ()
+      }
+      drain()
+      assert(store.get("at-head") === Some(2L))
+      assert(table.forget(3L) === 2L, s"partitioned=$partitioned")
+      assert(table.insert(events(4L)) === 3L)
+      drain() // the consumer at the old head receives the new event
+      assert(seen.sorted.toSeq === Seq(1L, 2L, 3L, 4L), s"partitioned=$partitioned")
+      assert(store.get("at-head") === Some(3L))
+    }
+  }
+
   test("WithEventLookupLimit: poll returns at most `limit` lowest-id events per lookup") {
     val dir = Files.createTempDirectory("graft-lookuplim").resolve("log").toString
     // reference eventstable_test.go:492 uses limit 10 on a larger log
