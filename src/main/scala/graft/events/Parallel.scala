@@ -2,8 +2,7 @@ package graft.events
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.concurrent.{ExecutionContext, Future}
 
 /** The full parallel-consumption option surface (reference:
   * rpatterns/parallel.go). `Runner.runParallel` is the minimal m-of-n
@@ -14,10 +13,12 @@ import scala.concurrent.duration.Duration
   * lands on a 1:1 API.
   *
   * Scale note: each shard's filter is a Catalyst predicate over a
-  * portable hash of the chosen key, so every shard's run scans only
-  * its rows (predicate pushdown), and n shards are n independent jobs
-  * — on a cluster they schedule on disjoint executors exactly like
-  * the reference's n goroutines on n hosts.
+  * portable hash of the chosen key, and the specs here run as n
+  * independent `runToHead`s, each reading every window of the log and
+  * keeping its own rows — on a cluster they schedule on disjoint
+  * executors like the reference's n goroutines on n hosts.
+  * `Runner.runParallel` (default hash, one filter) instead reads each
+  * window once for all shards.
   */
 object Parallel {
 
@@ -106,9 +107,9 @@ object Parallel {
   /** parallel.go Parallel / ParallelAck run loop, bounded form: all
     * shards run to head concurrently (the reference go-routines each
     * spec through RunForever; the supervised continuous form composes
-    * the same specs with Runner.runForever). */
+    * the same specs with Runner.runForever). A shard's failure is
+    * rethrown only once every shard has stopped, so no shard is still
+    * consuming or committing when the caller sees it. */
   def run(specList: Seq[Spec])(implicit ec: ExecutionContext): Seq[Runner.RunResult] =
-    Await.result(
-      Future.sequence(specList.map(sp => Future(Runner.runToHead(sp)))),
-      Duration.Inf)
+    Runner.awaitAll(specList.map(sp => Future(Runner.runToHead(sp)))).map(_.get)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
 /** The consume loop (reference: run.go reflex.Run) re-expressed two
@@ -117,66 +118,74 @@ object Runner {
     * @return (consumed, skipped)
     */
   private def attempt(spec: Spec, batch: DataFrame, cursor: Long): (Long, Long) = {
-    // Materializing the cache evaluates the event FILTER; a failure
-    // there means no consumer ever saw the batch, so it is wrapped as
-    // a filter error (reference consumer.go:177 asFilterErr) and
-    // deliberately raised BEFORE the error-mode machinery below:
-    // filter errors are never retried, skipped or dead-lettered —
-    // BestEffort/DeadLetter eating a filter bug would silently drop
-    // events no consumer attempted (errors.go IsFilterErr contract).
-    // cache() is covered too: over a LocalRelation (testkit logs) the
-    // optimizer's ConvertToLocalRelation evaluates the filter at
-    // planning time, so the error can surface before the count.
-    // r17 (r16 advice): the wrap is NARROW — only failures whose
-    // cause chain carries a filter-evaluation marker classify
-    // (Errors.isFilterOriginated); a transient read/fetch error on a
-    // filtered spec flows into the error-mode/retry path below, like
-    // the reference, instead of aborting unretried as a filter bug.
-    def wrapFilterErr[T](body: => T): T =
-      try body
-      catch {
-        case NonFatal(e)
-            if spec.filter.isDefined && Errors.isFilterOriginated(e) =>
-          throw new Errors.FilterException(e)
-      }
-    val cached = wrapFilterErr(batch.cache())
+    val filtered = spec.filter.isDefined
+    val cached = wrapFilterErr(filtered)(batch.cache())
     try {
-      val n = wrapFilterErr(cached.count())
-      if (n == 0) return (0L, 0L)
-      def tryOnce(): Unit =
-        try spec.consumer.fn(cached)
-        catch {
-          case NonFatal(e) =>
-            Metrics.recordError(spec.consumer.name)
-            spec.consumer.recover match {
-              case Some(r) => r(e, cached).foreach { unrecovered =>
-                // consumer.go:196-200: the custom error counter ticks
-                // only when recovery did NOT eliminate the error
-                spec.consumer.errorCounter.foreach(_.apply())
-                throw unrecovered
-              } // None → recovered
-              case None =>
-                spec.consumer.errorCounter.foreach(_.apply())
-                throw e
-            }
-        }
-      spec.consumer.errorMode match {
-        case FailFast =>
-          tryOnce(); (n, 0L)
-        case BestEffort(retries) =>
-          retry(retries)(tryOnce()) match {
-            case None => (n, 0L)
-            case Some(_) => (0L, n)
-          }
-        case DeadLetter(retries, errors) =>
-          retry(retries)(tryOnce()) match {
-            case None => (n, 0L)
-            case Some(e) =>
-              errors.record(spec.consumer.name, cursor, e.getMessage)
-              (0L, n)
+      val n = wrapFilterErr(filtered)(cached.count())
+      if (n == 0) (0L, 0L) else consume(spec.consumer, cached, n, cursor)
+    } finally cached.unpersist()
+  }
+
+  /** Materializing a batch evaluates the event FILTER; a failure there
+    * means no consumer ever saw the batch, so it is wrapped as a
+    * filter error (reference consumer.go:177 asFilterErr) and raised
+    * BEFORE the error-mode machinery: filter errors are never retried,
+    * skipped or dead-lettered — BestEffort/DeadLetter eating a filter
+    * bug would silently drop events no consumer attempted (errors.go
+    * IsFilterErr contract). `cache()` is covered too: over a
+    * LocalRelation (testkit logs) the optimizer's ConvertToLocalRelation
+    * evaluates the filter at planning time, so the error can surface
+    * before the count. The wrap is NARROW — only failures whose cause
+    * chain carries a filter-evaluation marker classify
+    * (Errors.isFilterOriginated); a transient read/fetch error flows
+    * on unwrapped, like the reference.
+    */
+  private def wrapFilterErr[T](filtered: Boolean)(body: => T): T =
+    try body
+    catch {
+      case NonFatal(e) if filtered && Errors.isFilterOriginated(e) =>
+        throw new Errors.FilterException(e)
+    }
+
+  /** Hands a materialized batch of `n` events to the consumer under
+    * its error mode.
+    * @return (consumed, skipped)
+    */
+  private def consume(consumer: Consumer, batch: DataFrame, n: Long,
+      cursor: Long): (Long, Long) = {
+    def tryOnce(): Unit =
+      try consumer.fn(batch)
+      catch {
+        case NonFatal(e) =>
+          Metrics.recordError(consumer.name)
+          consumer.recover match {
+            case Some(r) => r(e, batch).foreach { unrecovered =>
+              // consumer.go:196-200: the custom error counter ticks
+              // only when recovery did NOT eliminate the error
+              consumer.errorCounter.foreach(_.apply())
+              throw unrecovered
+            } // None → recovered
+            case None =>
+              consumer.errorCounter.foreach(_.apply())
+              throw e
           }
       }
-    } finally cached.unpersist()
+    consumer.errorMode match {
+      case FailFast =>
+        tryOnce(); (n, 0L)
+      case BestEffort(retries) =>
+        retry(retries)(tryOnce()) match {
+          case None => (n, 0L)
+          case Some(_) => (0L, n)
+        }
+      case DeadLetter(retries, errors) =>
+        retry(retries)(tryOnce()) match {
+          case None => (n, 0L)
+          case Some(e) =>
+            errors.record(consumer.name, cursor, e.getMessage)
+            (0L, n)
+        }
+    }
   }
 
   /** @return None on success, Some(error) after exhausting retries. */
@@ -261,21 +270,94 @@ object Runner {
   }
 
   /** rpatterns/parallel.go: n hash-sharded consumers, each with its own
-    * cursor (`name_m_of_n`), run concurrently. Co-location note: the
-    * shard predicate is a pushed filter, so each shard scans only its
-    * rows; on a cluster the shards are independent jobs.
+    * cursor (`name_m_of_n`), over ONE pass of the log. One `head()` and
+    * one boundary pass, from the smallest shard cursor, serve every
+    * shard. Each window is read once for all shards: the user filter
+    * applied, cached, and materialized by one query that also counts
+    * each shard's rows. Every live shard's `fn` then gets a view of the
+    * cached window, `shardId(n) === m`. The view carries no per-window
+    * literal, so its generated code is compiled once per shard rather
+    * than once per window; only a shard whose cursor sits inside the
+    * window (a resume after uneven progress) adds `id > cursor`.
+    *
+    * The shards of one window run concurrently on `ec`; the next window
+    * starts when all of them have returned. Error modes, noop-range
+    * jumps, cursor commits and Metrics are per shard, as in
+    * `runToHead`. A shard whose batch fails stops there, its cursor at
+    * its last committed window, while the other shards run on to the
+    * head; the call then rethrows the failure of the lowest-numbered
+    * failed shard, so no shard is still running when it throws.
     */
   def runParallel(spec: Spec, n: Int)(implicit ec: ExecutionContext): Seq[RunResult] = {
-    val futures = (0 until n).map { m =>
-      Future {
-        val shardFilter = EventFilter.shardMofN(m, n)
-        val combined = spec.filter.fold[EventFilter](shardFilter)(f => f && shardFilter)
-        val named = spec.consumer.copy(name = s"${spec.consumer.name}_${m + 1}_of_$n")
-        runToHead(spec.copy(consumer = named, filter = Some(combined)))
+    final class Shard(val m: Int) {
+      val consumer = spec.consumer.copy(name = Parallel.appendMofN(spec.consumer.name, m, n))
+      var cursor = spec.store.get(consumer.name).getOrElse(-1L)
+      var batches = 0
+      var consumed = 0L
+      var skipped = 0L
+      var failure: Option[Throwable] = None
+      def commit(c: Long): Unit = { spec.store.set(consumer.name, c); cursor = c }
+      /** Runs `body` unless the shard has failed; a failure stops the shard. */
+      def guard(body: => Unit): Unit = if (failure.isEmpty) failure = Try(body).failed.toOption
+    }
+    val shards = (0 until n).map(new Shard(_))
+    val head = spec.log.head()
+    val base = spec.filter.fold(spec.log.df)(f => spec.log.df.filter(f.toColumn))
+    val shardId = EventFilter.shardId(n)
+    val from = shards.map(_.cursor).minOption.getOrElse(head)
+    val bounds = if (from < head) batchBoundaries(spec.log.df, from, head, spec.batchSize)
+      else Iterator.empty
+    bounds.takeWhile(_ => shards.exists(_.failure.isEmpty)).foreach { upper =>
+      val live = shards.filter { s =>
+        spec.noopRanges.foreach(ranges => s.guard {
+          val jumped = Patterns.skipNoops(ranges, s.cursor)
+          if (jumped > s.cursor) s.commit(jumped)
+        })
+        s.failure.isEmpty && upper > s.cursor
+      }
+      if (live.nonEmpty) {
+        val t0 = System.nanoTime()
+        val lo = live.map(_.cursor).min
+        val window = base.filter(col("id") > lo && col("id") <= upper)
+        try {
+          // the shard predicate makes every shard's batch a filtered one,
+          // so filter errors classify as they do for a filtered runToHead
+          Try(wrapFilterErr(filtered = true)(window.cache().groupBy(shardId).count()
+              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)) match {
+            case Failure(e) => live.foreach(_.failure = Some(e))
+            case Success(counts) =>
+              val outcomes = awaitAll(live.map { s =>
+                Future {
+                  val ofShard = shardId === s.m
+                  val inside = s.cursor > lo
+                  val view = window.filter(if (inside) ofShard && col("id") > s.cursor else ofShard)
+                  val got = if (inside) view.count() else counts.getOrElse(s.m, 0L)
+                  val (ok, skip) = if (got == 0) (0L, 0L) else consume(s.consumer, view, got, s.cursor)
+                  s.commit(upper)
+                  s.batches += 1
+                  s.consumed += ok
+                  s.skipped += skip
+                  Metrics.recordBatch(s.consumer.name, ok, skip,
+                    (System.nanoTime() - t0) / 1000000L, upper)
+                }
+              })
+              live.zip(outcomes).foreach { case (s, o) => s.failure = o.failed.toOption }
+          }
+        } finally window.unpersist()
       }
     }
-    Await.result(Future.sequence(futures), Duration.Inf)
+    // e.g. the whole remainder was a noop range
+    shards.foreach(s => s.guard(if (s.cursor < head) s.commit(head)))
+    shards.flatMap(_.failure).headOption.foreach(e => throw e)
+    shards.map(s => RunResult(s.batches, s.consumed, s.cursor, s.skipped))
   }
+
+  /** Waits for EVERY future, failed or not, so a caller that sees an
+    * error knows no task is still running.
+    */
+  private[events] def awaitAll[T](fs: Seq[Future[T]])(
+      implicit ec: ExecutionContext): Seq[Try[T]] =
+    Await.result(Future.sequence(fs.map(_.transform(Success(_)))), Duration.Inf)
 
   /** Consumer-lag monitoring (reference: consumer.go
     * WithConsumerLagAlert + internal/metrics): how far behind the head

@@ -114,4 +114,26 @@ class ParallelSpec extends AnyFunSuite {
     Runner.runToHead(sp)
     assert(store.get("single-ack") === Some(249L))
   }
+
+  test("Parallel.run throws only after every shard has stopped: the others run on to the head") {
+    val store = new MemCursorStore()
+    val returned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val late = new java.util.concurrent.atomic.AtomicLong()
+    val firstShardCalls = new java.util.concurrent.atomic.AtomicLong()
+    // default ByEventId: a batch's shard is the hash of its ids
+    val specs = Parallel.specs(log, store, "prun-fail", 4, b => {
+      if (returned.get()) late.incrementAndGet()
+      val shards = b.select(EventFilter.shardIdOf(4, col("id"))).distinct().collect()
+        .map(_.getInt(0))
+      if (shards.sameElements(Array(0)) && firstShardCalls.incrementAndGet() == 2)
+        throw new RuntimeException("first shard fails on its 2nd window")
+      Thread.sleep(100)
+    }, batchSize = 100)
+    val e = intercept[RuntimeException] { Parallel.run(specs) }
+    returned.set(true)
+    assert(e.getMessage === "first shard fails on its 2nd window")
+    (2 to 4).foreach { m => assert(store.get(s"prun-fail_${m}_of_4") === Some(999L)) }
+    Thread.sleep(500)
+    assert(late.get() === 0L, "a shard fn ran after Parallel.run had thrown")
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.ExecutionContext
+import scala.util.{Failure, Success, Try}
 import graft.TestSpark
 
 class RunnerSpec extends AnyFunSuite {
@@ -414,5 +415,191 @@ class RunnerSpec extends AnyFunSuite {
         errorMode = BestEffort(retries = 2), errorCounter = counter),
       batchSize = 1000))
     assert(ticks === 1 + 3) // initial + 2 retries
+  }
+
+  /** A consumer fn that records the ids it sees by shard (under
+    * `runParallel(…, n)`'s hash), checking each batch is one shard's.
+    */
+  private final class ShardIds(n: Int) {
+    private var seen = Map.empty[Int, Set[Long]]
+    val fn: DataFrame => Unit = b => {
+      val rows = b.select(EventFilter.shardId(n), col("id")).collect()
+      val shards = rows.map(_.getInt(0)).distinct
+      assert(shards.length === 1, s"one batch spans shards ${shards.mkString(",")}")
+      synchronized {
+        seen += shards(0) -> (seen.getOrElse(shards(0), Set.empty[Long]) ++ rows.map(_.getLong(1)))
+      }
+    }
+    def ids: Map[Int, Set[Long]] = synchronized(seen)
+  }
+
+  test("runParallel gives the same results as n filtered runToHeads (user filter, noop ranges)") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val n = 4
+    val noopLog = new EventLog(log.df.withColumn("eventType",
+      org.apache.spark.sql.functions.when(col("id").between(300, 599), lit("noop"))
+        .otherwise(col("eventType"))))
+    val ranges = Patterns.noopRanges(noopLog.df)
+    assert(ranges === Seq((300L, 599L)))
+    val user = !EventFilter.ofType("purchase")
+    def spec(name: String, rec: ShardIds, store: CursorStore) =
+      Spec(noopLog, store, Consumer(name, rec.fn), filter = Some(user), batchSize = 300,
+        noopRanges = Some(ranges))
+
+    val newRec = new ShardIds(n)
+    val newStore = new MemCursorStore()
+    val shared = Runner.runParallel(spec("par-new", newRec, newStore), n)
+
+    val oldRec = new ShardIds(n)
+    val oldStore = new MemCursorStore()
+    val base = spec("par-old", oldRec, oldStore)
+    val separate = (0 until n).map { m =>
+      Runner.runToHead(base.copy(
+        consumer = base.consumer.copy(name = s"par-old_${m + 1}_of_$n"),
+        filter = Some(user && EventFilter.shardMofN(m, n))))
+    }
+
+    assert(shared === separate)
+    assert(shared.map(_.batches).distinct === Seq(3)) // (-1,299], noop jump, (599,899], (899,999]
+    assert(newRec.ids === oldRec.ids)
+    assert(newRec.ids.values.flatten.forall(id => id < 300L || id > 599L))
+    (1 to n).foreach { m =>
+      assert(newStore.get(s"par-new_${m}_of_$n") === oldStore.get(s"par-old_${m}_of_$n"))
+      assert(newStore.get(s"par-new_${m}_of_$n") === Some(999L))
+    }
+  }
+
+  test("runParallel throws only after every shard has stopped: the others run on to the head") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val store = new MemCursorStore()
+    val returned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val late = new AtomicLong()
+    val firstShardCalls = new AtomicLong()
+    val spec = Spec(log, store, Consumer("c-par-fail", b => {
+      if (returned.get()) late.incrementAndGet()
+      val shards = b.select(EventFilter.shardId(4)).distinct().collect().map(_.getInt(0))
+      if (shards.sameElements(Array(0)) && firstShardCalls.incrementAndGet() == 2)
+        throw new RuntimeException("first shard fails on its 2nd window")
+      Thread.sleep(100)
+    }), batchSize = 100)
+    val e = intercept[RuntimeException] { Runner.runParallel(spec, 4) }
+    returned.set(true)
+    assert(e.getMessage === "first shard fails on its 2nd window")
+    assert(store.get("c-par-fail_1_of_4") === Some(99L))
+    (2 to 4).foreach { m => assert(store.get(s"c-par-fail_${m}_of_4") === Some(999L)) }
+    Thread.sleep(500)
+    assert(late.get() === 0L, "a shard fn ran after runParallel had thrown")
+  }
+
+  test("runParallel under injected faults: at-least-once per shard across uneven restarts") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val n = 4
+    def shardName(m: Int) = s"c-par-faults_${m + 1}_of_$n"
+    val shardOf = log.df.select(col("id"), EventFilter.shardId(n)).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val ids = shardOf.keys.toVector.sorted
+    // uneven starting cursors: ids at or below them were seen by an earlier run
+    val initial = Map(0 -> -1L, 1 -> 137L, 2 -> 402L, 3 -> 58L)
+    // seeded fault points, each firing once: fn throws on the batch that
+    // holds one; store.set throws on the commit that passes one
+    val rnd = new scala.util.Random(20261019L)
+    def faults(k: Int) = {
+      val s = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+      rnd.shuffle(ids.filter(id => id > initial(shardOf(id)))).take(k).foreach(s.add(_))
+      s
+    }
+    val fnFaults = faults(2)
+    val setFaults = faults(2)
+
+    val lock = new Object
+    val delivered = Array.tabulate(n)(m => ids.filter(id => shardOf(id) == m && id <= initial(m)).toSet)
+    val lastBatch = Array.fill(n)(Set.empty[Long])
+    var thisRun = Array.fill(n)(Vector.empty[Set[Long]])
+    val consumer = Consumer("c-par-faults", b => {
+      val got = b.select(col("id")).collect().map(_.getLong(0)).toSet
+      val m = shardOf(got.head)
+      lock.synchronized { thisRun(m) :+= got }
+      if (got.exists(fnFaults.remove)) throw new RuntimeException("injected fn fault")
+    })
+    val mem = new MemCursorStore(initial.map { case (m, c) => shardName(m) -> c })
+    val store = new CursorStore {
+      def get(name: String): Option[Long] = mem.get(name)
+      def set(name: String, cursor: Long): Unit = {
+        val prev = mem.get(name).getOrElse(-1L)
+        val passes = (id: Long) => id > prev && id <= cursor && shardName(shardOf(id)) == name
+        if (ids.exists(id => passes(id) && setFaults.remove(id)))
+          throw new RuntimeException("injected set fault")
+        mem.set(name, cursor)
+      }
+    }
+    val spec = Spec(log, store, consumer, batchSize = 250)
+
+    var runs = 0
+    var done = false
+    while (!done) {
+      runs += 1
+      assert(runs <= 8, "faults did not converge")
+      thisRun = Array.fill(n)(Vector.empty)
+      Try(Await.result(Future(Runner.runParallel(spec, n)), 60.seconds)) match {
+        case Success(_) => done = true
+        case Failure(e) => assert(e.getMessage.startsWith("injected"), e.toString)
+      }
+      (0 until n).foreach { m =>
+        val got = thisRun(m)
+        // a crash replays at most the one window the shard had in flight
+        val replayed = got.flatten.toSet.intersect(delivered(m))
+        assert(replayed.subsetOf(lastBatch(m)),
+          s"run $runs shard $m replayed ${(replayed -- lastBatch(m)).toSeq.sorted.take(5)}")
+        delivered(m) ++= got.flatten
+        if (got.nonEmpty) lastBatch(m) = got.last
+        // no cursor passes an event its shard never saw
+        val cursor = store.get(shardName(m)).getOrElse(-1L)
+        val unseen = ids.filter(id => shardOf(id) == m && id <= cursor && !delivered(m)(id))
+        assert(unseen.isEmpty, s"run $runs shard $m cursor $cursor passed unseen ${unseen.take(5)}")
+      }
+    }
+    assert(runs > 1 && fnFaults.isEmpty && setFaults.isEmpty, s"faults left after $runs runs")
+    // every event reached its shard at least once
+    ids.foreach { id => assert(delivered(shardOf(id))(id), s"event $id never reached its shard") }
+    (0 until n).foreach { m => assert(store.get(shardName(m)) === Some(999L)) }
+  }
+
+  test("runParallel's own queries grow with the windows, not with windows x shards") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val queries = new AtomicLong()
+    val marked = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = tally(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = tally(qe)
+      private def tally(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains("scan-count-marker")) marked.set(true)
+        else { queries.incrementAndGet(); () }
+    }
+    // the consumer runs no query, so every query counted is the runner's
+    def runnerQueries(batchSize: Int): Long = {
+      queries.set(0L)
+      marked.set(false)
+      spark.listenerManager.register(listener)
+      try {
+        Runner.runParallel(Spec(log, new MemCursorStore(), Consumer("c-scans", _ => ()),
+          batchSize = batchSize), 4)
+        // listener events arrive in order: once the marker is in, so is the rest
+        spark.range(1).select(lit("scan-count-marker")).collect()
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (!marked.get() && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(marked.get(), "query listener did not drain")
+      } finally spark.listenerManager.unregister(listener)
+      queries.get()
+    }
+    val four = runnerQueries(250) // 4 windows
+    val ten = runnerQueries(100)  // 10 windows
+    // one query per window (a shard walk would add 4 per window),
+    // plus head() and the boundary pass
+    assert(ten - four <= 6L + 2L, s"4 windows: $four queries, 10 windows: $ten")
+    assert(ten <= 10L + 5L, s"10 windows: $ten queries")
   }
 }
