@@ -2,7 +2,7 @@ package graft.events
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
-import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.ExecutionContext
 
 /** The full parallel-consumption option surface (reference:
   * rpatterns/parallel.go). `Runner.runParallel` is the minimal m-of-n
@@ -13,12 +13,10 @@ import scala.concurrent.{ExecutionContext, Future}
   * lands on a 1:1 API.
   *
   * Scale note: each shard's filter is a Catalyst predicate over a
-  * portable hash of the chosen key, and the specs here run as n
-  * independent `runToHead`s, each reading every window of the log and
-  * keeping its own rows — on a cluster they schedule on disjoint
-  * executors like the reference's n goroutines on n hosts.
-  * `Runner.runParallel` (default hash, one filter) instead reads each
-  * window once for all shards.
+  * portable hash of the chosen key. `run` reads each window of the log
+  * once for all the specs, through the same loop as `Runner.runToHead`
+  * and `Runner.runParallel`; each spec's `fn` gets its shard's view of
+  * that window.
   */
 object Parallel {
 
@@ -105,11 +103,21 @@ object Parallel {
     }
 
   /** parallel.go Parallel / ParallelAck run loop, bounded form: all
-    * shards run to head concurrently (the reference go-routines each
-    * spec through RunForever; the supervised continuous form composes
-    * the same specs with Runner.runForever). A shard's failure is
-    * rethrown only once every shard has stopped, so no shard is still
-    * consuming or committing when the caller sees it. */
+    * shards run to head together, one read of each window serving every
+    * spec (the reference go-routines each spec through RunForever; the
+    * supervised continuous form composes the same specs with
+    * Runner.runForever). The specs must share one `EventLog` instance,
+    * batch size and noop ranges, as `specs` and `ackSpecs` make them;
+    * each spec's filter picks its part of every window. A shard's
+    * failure is rethrown only once every shard has stopped, so no shard
+    * is still consuming or committing when the caller sees it. */
   def run(specList: Seq[Spec])(implicit ec: ExecutionContext): Seq[Runner.RunResult] =
-    Runner.awaitAll(specList.map(sp => Future(Runner.runToHead(sp)))).map(_.get)
+    specList.headOption.fold(Seq.empty[Runner.RunResult]) { first =>
+      require(specList.forall(sp => (sp.log eq first.log) && sp.batchSize == first.batchSize &&
+        sp.noopRanges == first.noopRanges),
+        "Parallel.run: specs must share one EventLog, batchSize and noopRanges")
+      Runner.consumeWindows(first.copy(filter = None), specList.map { sp =>
+        new Runner.Shard(sp.consumer, sp.store, sp.filter.map(_.toColumn))
+      })
+    }
 }

@@ -1,6 +1,6 @@
 package graft.events
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -8,13 +8,15 @@ import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
 
-/** The consume loop (reference: run.go reflex.Run) re-expressed two
-  * ways:
+/** The consume loop (reference: run.go reflex.Run), in two forms:
   *
-  *  1. `runToHead` — bounded batch replay (StreamToHead semantics):
-  *     slice the log after the committed cursor, process in id-ordered
-  *     micro-batches, commit the cursor after each successful batch.
-  *     At-least-once: a crash between `fn` and `set` replays the batch.
+  *  1. Bounded (StreamToHead semantics): `runToHead`, `runParallel` and
+  *     `Parallel.run` are one loop, `consumeWindows`, over different
+  *     lists of consumers. The log after the smallest cursor is cut
+  *     into id-ordered windows; each window is read once for every
+  *     consumer of it, and each consumer's cursor commits after its
+  *     successful batch. At-least-once: a crash between `fn` and `set`
+  *     replays the batch.
   *
   *  2. `runStream` — live Structured Streaming over the event-log
   *     directory with `foreachBatch`; the same cursor protocol guards
@@ -25,56 +27,13 @@ object Runner {
 
   final case class RunResult(batches: Int, consumed: Long, finalCursor: Long, skipped: Long)
 
-  /** Bounded replay to the head-at-start snapshot.
-    *
-    * Batch windows are computed in ONE pass up front (every
-    * batchSize-th id, two-level rank — no global sort and no per-batch
-    * TakeOrdered over the shrinking tail, which cost O(batches ·
-    * tail-scan) before). Each batch then reads with a pushed-down id
-    * range predicate only. The driver holds one long per batch —
-    * the same order of state the loop itself needs.
+  /** Bounded replay to the head-at-start snapshot: `consumeWindows`
+    * with one consumer that takes every event the spec's filter
+    * passes. Its `fn` runs on the calling thread.
     */
-  def runToHead(spec: Spec): RunResult = {
-    val base = spec.filter.fold(spec.log.df)(f => spec.log.df.filter(f.toColumn))
-    val head = spec.log.head()
-    var cursor = spec.store.get(spec.consumer.name).getOrElse(-1L)
-    var batches = 0
-    var consumed = 0L
-    var skipped = 0L
-    if (cursor >= head) return RunResult(0, 0L, cursor, 0L)
-
-    batchBoundaries(spec.log.df, cursor, head, spec.batchSize).foreach { upper =>
-      // Noop-range cursor override (rsql/loader.go): resuming into a
-      // gap-filled range jumps straight past it — no scan, no fn call.
-      spec.noopRanges.foreach { ranges =>
-        val jumped = Patterns.skipNoops(ranges, cursor)
-        if (jumped > cursor) {
-          cursor = jumped
-          spec.store.set(spec.consumer.name, cursor)
-        }
-      }
-      if (upper > cursor) {
-        // The batch window (cursor, upper] is defined on the UNFILTERED
-        // log so the cursor advances past filtered-out events too
-        // (reflex filters advance cursors — filter.go).
-        val visible = base.filter(col("id") > cursor && col("id") <= upper)
-        val t0 = System.nanoTime()
-        val n = attempt(spec, visible, cursor)
-        consumed += n._1
-        skipped += n._2
-        cursor = upper
-        spec.store.set(spec.consumer.name, cursor)
-        batches += 1
-        Metrics.recordBatch(spec.consumer.name, n._1, n._2,
-          (System.nanoTime() - t0) / 1000000L, cursor)
-      }
-    }
-    if (cursor < head) { // e.g. the whole remainder was a noop range
-      cursor = head
-      spec.store.set(spec.consumer.name, cursor)
-    }
-    RunResult(batches, consumed, cursor, skipped)
-  }
+  def runToHead(spec: Spec): RunResult = // a lone shard never reaches the executor
+    consumeWindows(spec, Seq(new Shard(spec.consumer, spec.store, None)))(
+      ExecutionContext.parasitic).head
 
   /** Ids that close each batch of `batchSize` events in (cursor, head]
     * — every batchSize-th id by global rank, plus the head — streamed
@@ -112,18 +71,6 @@ object Runner {
         .select("id").distinct()
         .collect().map(_.getLong(0)).sorted.iterator
     }
-  }
-
-  /** One batch attempt honoring the consumer's error mode.
-    * @return (consumed, skipped)
-    */
-  private def attempt(spec: Spec, batch: DataFrame, cursor: Long): (Long, Long) = {
-    val filtered = spec.filter.isDefined
-    val cached = wrapFilterErr(filtered)(batch.cache())
-    try {
-      val n = wrapFilterErr(filtered)(cached.count())
-      if (n == 0) (0L, 0L) else consume(spec.consumer, cached, n, cursor)
-    } finally cached.unpersist()
   }
 
   /** Materializing a batch evaluates the event FILTER; a failure there
@@ -270,45 +217,72 @@ object Runner {
   }
 
   /** rpatterns/parallel.go: n hash-sharded consumers, each with its own
-    * cursor (`name_m_of_n`), over ONE pass of the log. One `head()` and
-    * one boundary pass, from the smallest shard cursor, serve every
-    * shard. Each window is read once for all shards: the user filter
-    * applied, cached, and materialized by one query that also counts
-    * each shard's rows. Every live shard's `fn` then gets a view of the
-    * cached window, `shardId(n) === m`. The view carries no per-window
-    * literal, so its generated code is compiled once per shard rather
-    * than once per window; only a shard whose cursor sits inside the
-    * window (a resume after uneven progress) adds `id > cursor`.
-    *
-    * The shards of one window run concurrently on `ec`; the next window
-    * starts when all of them have returned. Error modes, noop-range
-    * jumps, cursor commits and Metrics are per shard, as in
-    * `runToHead`. A shard whose batch fails stops there, its cursor at
-    * its last committed window, while the other shards run on to the
-    * head; the call then rethrows the failure of the lowest-numbered
-    * failed shard, so no shard is still running when it throws.
+    * cursor (`name_m_of_n`), over ONE pass of the log: `consumeWindows`
+    * with shard m taking `shardId(n) === m` of each window the user
+    * filter passes. The shards of one window run concurrently on `ec`.
     */
   def runParallel(spec: Spec, n: Int)(implicit ec: ExecutionContext): Seq[RunResult] = {
-    final class Shard(val m: Int) {
-      val consumer = spec.consumer.copy(name = Parallel.appendMofN(spec.consumer.name, m, n))
-      var cursor = spec.store.get(consumer.name).getOrElse(-1L)
-      var batches = 0
-      var consumed = 0L
-      var skipped = 0L
-      var failure: Option[Throwable] = None
-      def commit(c: Long): Unit = { spec.store.set(consumer.name, c); cursor = c }
-      /** Runs `body` unless the shard has failed; a failure stops the shard. */
-      def guard(body: => Unit): Unit = if (failure.isEmpty) failure = Try(body).failed.toOption
-    }
-    val shards = (0 until n).map(new Shard(_))
+    val shardId = EventFilter.shardId(n)
+    consumeWindows(spec, (0 until n).map { m =>
+      new Shard(spec.consumer.copy(name = Parallel.appendMofN(spec.consumer.name, m, n)),
+        spec.store, Some(shardId === m))
+    })
+  }
+
+  /** One consumer of `consumeWindows`: its consumer, its cursor store
+    * and, when it takes part of each window only, its predicate.
+    */
+  private[events] final class Shard(val consumer: Consumer, store: CursorStore,
+      val pick: Option[Column]) {
+    var cursor = store.get(consumer.name).getOrElse(-1L)
+    var batches = 0
+    var consumed = 0L
+    var skipped = 0L
+    var failure: Option[Throwable] = None
+    def commit(c: Long): Unit = { store.set(consumer.name, c); cursor = c }
+    /** Runs `body` unless the shard has failed; a failure stops the shard. */
+    def guard(body: => Unit): Unit = if (failure.isEmpty) failure = Try(body).failed.toOption
+  }
+
+  /** The bounded consume loop. `spec` gives the log, the user filter,
+    * the batch size and the noop ranges; its consumer and store are
+    * unused, each shard brings its own.
+    *
+    * One `head()` and one boundary pass on the unfiltered log, from the
+    * smallest shard cursor, serve every shard. Batch windows are cut on
+    * the UNFILTERED log, so cursors advance past filtered-out events too
+    * (reflex filters advance cursors — filter.go). Each window is read
+    * once: the user filter applied, cached, and materialized by one
+    * query that also counts each live shard's rows. Every live shard's
+    * `fn` then gets the cached window, or a view of it under the
+    * shard's predicate. The view carries no per-window literal, so its
+    * generated code is compiled once per shard rather than once per
+    * window; only a shard whose cursor sits inside the window (a resume
+    * after uneven progress) adds `id > cursor`.
+    *
+    * A lone live shard runs on the calling thread; several run
+    * concurrently on `ec`, and the next window starts when all of them
+    * have returned. Error modes, noop-range jumps, cursor commits and
+    * Metrics are per shard. A shard whose batch fails stops there, its
+    * cursor at its last committed window, while the other shards run
+    * on to the head; the call then rethrows the failure of the first
+    * failed shard in `shards`, so no shard is still running when it
+    * throws.
+    */
+  private[events] def consumeWindows(spec: Spec, shards: Seq[Shard])(
+      implicit ec: ExecutionContext): Seq[RunResult] = {
     val head = spec.log.head()
     val base = spec.filter.fold(spec.log.df)(f => spec.log.df.filter(f.toColumn))
-    val shardId = EventFilter.shardId(n)
+    val filtered = spec.filter.isDefined || shards.exists(_.pick.isDefined)
     val from = shards.map(_.cursor).minOption.getOrElse(head)
     val bounds = if (from < head) batchBoundaries(spec.log.df, from, head, spec.batchSize)
       else Iterator.empty
-    bounds.takeWhile(_ => shards.exists(_.failure.isEmpty)).foreach { upper =>
+    // failures checked first: a stopped run fetches no further boundaries
+    while (shards.exists(_.failure.isEmpty) && bounds.hasNext) {
+      val upper = bounds.next()
       val live = shards.filter { s =>
+        // Noop-range cursor override (rsql/loader.go): resuming into a
+        // gap-filled range jumps straight past it — no scan, no fn call.
         spec.noopRanges.foreach(ranges => s.guard {
           val jumped = Patterns.skipNoops(ranges, s.cursor)
           if (jumped > s.cursor) s.commit(jumped)
@@ -319,29 +293,30 @@ object Runner {
         val t0 = System.nanoTime()
         val lo = live.map(_.cursor).min
         val window = base.filter(col("id") > lo && col("id") <= upper)
+        def batch(s: Shard, counted: Long): Unit = {
+          val inside = s.cursor > lo
+          val view = (s.pick ++ Option.when(inside)(col("id") > s.cursor))
+            .reduceOption(_ && _).fold(window)(window.filter)
+          val got = if (inside) view.count() else counted
+          val (ok, skip) = if (got == 0) (0L, 0L) else consume(s.consumer, view, got, s.cursor)
+          s.commit(upper)
+          s.batches += 1
+          s.consumed += ok
+          s.skipped += skip
+          Metrics.recordBatch(s.consumer.name, ok, skip,
+            (System.nanoTime() - t0) / 1000000L, upper)
+        }
         try {
-          // the shard predicate makes every shard's batch a filtered one,
-          // so filter errors classify as they do for a filtered runToHead
-          Try(wrapFilterErr(filtered = true)(window.cache().groupBy(shardId).count()
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)) match {
+          val counts = live.map(_.pick.fold(count(lit(1)))(p => count(when(p, lit(1)))))
+          Try(wrapFilterErr(filtered)(window.cache().agg(counts.head, counts.tail: _*)
+              .collect()(0))) match {
             case Failure(e) => live.foreach(_.failure = Some(e))
-            case Success(counts) =>
-              val outcomes = awaitAll(live.map { s =>
-                Future {
-                  val ofShard = shardId === s.m
-                  val inside = s.cursor > lo
-                  val view = window.filter(if (inside) ofShard && col("id") > s.cursor else ofShard)
-                  val got = if (inside) view.count() else counts.getOrElse(s.m, 0L)
-                  val (ok, skip) = if (got == 0) (0L, 0L) else consume(s.consumer, view, got, s.cursor)
-                  s.commit(upper)
-                  s.batches += 1
-                  s.consumed += ok
-                  s.skipped += skip
-                  Metrics.recordBatch(s.consumer.name, ok, skip,
-                    (System.nanoTime() - t0) / 1000000L, upper)
-                }
+            case Success(row) if live.size == 1 => live.head.guard(batch(live.head, row.getLong(0)))
+            case Success(row) =>
+              val outcomes = awaitAll(live.zipWithIndex.map { case (s, i) =>
+                Future(s.guard(batch(s, row.getLong(i))))
               })
-              live.zip(outcomes).foreach { case (s, o) => s.failure = o.failed.toOption }
+              live.zip(outcomes).foreach { case (s, o) => o.failed.foreach(e => s.failure = Some(e)) }
           }
         } finally window.unpersist()
       }

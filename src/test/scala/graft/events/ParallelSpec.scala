@@ -1,6 +1,7 @@
 package graft.events
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import scala.concurrent.ExecutionContext
 import graft.TestSpark
@@ -135,5 +136,54 @@ class ParallelSpec extends AnyFunSuite {
     (2 to 4).foreach { m => assert(store.get(s"prun-fail_${m}_of_4") === Some(999L)) }
     Thread.sleep(500)
     assert(late.get() === 0L, "a shard fn ran after Parallel.run had thrown")
+  }
+
+  test("Parallel.run by foreign id matches each spec's own runToHead: ids, cursors, results") {
+    val n = 3
+    val opts = Parallel.Options(hashBy = Parallel.ByForeignId)
+    /** the ids each batch brings, by shard; every batch is one shard's */
+    final class Seen {
+      private var ids = Map.empty[Int, Set[Long]]
+      val fn: DataFrame => Unit = b => {
+        val rows = b.select(EventFilter.shardIdOf(n, col("foreignId")), col("id")).collect()
+        val shards = rows.map(_.getInt(0)).distinct
+        assert(shards.length === 1, s"one batch spans shards ${shards.mkString(",")}")
+        synchronized {
+          ids += shards(0) -> (ids.getOrElse(shards(0), Set.empty[Long]) ++ rows.map(_.getLong(1)))
+        }
+      }
+      def byShard: Map[Int, Set[Long]] = synchronized(ids)
+    }
+    val shared = new Seen
+    val sharedStore = new MemCursorStore()
+    val together = Parallel.run(Parallel.specs(log, sharedStore, "fid", n, shared.fn,
+      batchSize = 300, opts = opts))
+    val alone = new Seen
+    val aloneStore = new MemCursorStore()
+    val apart = Parallel.specs(log, aloneStore, "fid", n, alone.fn, batchSize = 300, opts = opts)
+      .map(Runner.runToHead)
+
+    assert(together === apart)
+    assert(together.map(_.batches).distinct === Seq(4)) // 300+300+300+100
+    assert(shared.byShard === alone.byShard)
+    assert(shared.byShard.values.map(_.size).sum === 1000)
+    (1 to n).foreach { m =>
+      assert(sharedStore.get(s"fid_${m}_of_$n") === aloneStore.get(s"fid_${m}_of_$n"))
+      assert(sharedStore.get(s"fid_${m}_of_$n") === Some(999L))
+    }
+  }
+
+  test("Parallel.run rejects specs over two different logs before consuming anything") {
+    val store = new MemCursorStore()
+    val calls = new java.util.concurrent.atomic.AtomicLong()
+    val fn: DataFrame => Unit = _ => { calls.incrementAndGet(); () }
+    val other = new EventLog(log.df)
+    val e = intercept[IllegalArgumentException] {
+      Parallel.run(Parallel.specs(log, store, "two-logs", 2, fn).take(1) ++
+        Parallel.specs(other, store, "two-logs", 2, fn).drop(1))
+    }
+    assert(e.getMessage.contains("one EventLog"))
+    assert(calls.get() === 0L)
+    assert(store.get("two-logs_1_of_2") === None && store.get("two-logs_2_of_2") === None)
   }
 }

@@ -566,10 +566,12 @@ class RunnerSpec extends AnyFunSuite {
     (0 until n).foreach { m => assert(store.get(shardName(m)) === Some(999L)) }
   }
 
-  test("runParallel's own queries grow with the windows, not with windows x shards") {
+  /** Queries the runner runs for one `run(batchSize)` call whose
+    * consumers run none, so every query counted is the runner's.
+    */
+  private def runnerQueries(run: Int => Unit)(batchSize: Int): Long = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val queries = new AtomicLong()
     val marked = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener = new QueryExecutionListener {
@@ -579,27 +581,42 @@ class RunnerSpec extends AnyFunSuite {
         if (qe.logical.toString.contains("scan-count-marker")) marked.set(true)
         else { queries.incrementAndGet(); () }
     }
-    // the consumer runs no query, so every query counted is the runner's
-    def runnerQueries(batchSize: Int): Long = {
-      queries.set(0L)
-      marked.set(false)
-      spark.listenerManager.register(listener)
-      try {
-        Runner.runParallel(Spec(log, new MemCursorStore(), Consumer("c-scans", _ => ()),
-          batchSize = batchSize), 4)
-        // listener events arrive in order: once the marker is in, so is the rest
-        spark.range(1).select(lit("scan-count-marker")).collect()
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!marked.get() && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(marked.get(), "query listener did not drain")
-      } finally spark.listenerManager.unregister(listener)
-      queries.get()
-    }
-    val four = runnerQueries(250) // 4 windows
-    val ten = runnerQueries(100)  // 10 windows
-    // one query per window (a shard walk would add 4 per window),
-    // plus head() and the boundary pass
-    assert(ten - four <= 6L + 2L, s"4 windows: $four queries, 10 windows: $ten")
-    assert(ten <= 10L + 5L, s"10 windows: $ten queries")
+    spark.listenerManager.register(listener)
+    try {
+      run(batchSize)
+      // listener events arrive in order: once the marker is in, so is the rest
+      spark.range(1).select(lit("scan-count-marker")).collect()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!marked.get() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marked.get(), "query listener did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    queries.get()
+  }
+
+  /** 4 windows, then 10: one query per window (a shard walk would add 4
+    * per window), plus head() and the boundary pass.
+    */
+  private def assertQueriesGrowWithWindows(what: String, run: Int => Unit): Unit = {
+    val four = runnerQueries(run)(250)
+    val ten = runnerQueries(run)(100)
+    assert(ten - four <= 6L + 2L, s"$what: 4 windows: $four queries, 10 windows: $ten")
+    assert(ten <= 10L + 5L, s"$what: 10 windows: $ten queries")
+  }
+
+  test("runParallel's own queries grow with the windows, not with windows x shards") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    assertQueriesGrowWithWindows("runParallel", batchSize =>
+      Runner.runParallel(Spec(log, new MemCursorStore(), Consumer("c-scans", _ => ()),
+        batchSize = batchSize), 4))
+  }
+
+  test("Parallel.run's own queries grow with the windows, not with windows x shards") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    assertQueriesGrowWithWindows("Parallel.run(specs)", batchSize =>
+      Parallel.run(Parallel.specs(log, new MemCursorStore(), "c-scans-specs", 4, _ => (),
+        batchSize = batchSize)))
+    assertQueriesGrowWithWindows("Parallel.run(ackSpecs)", batchSize =>
+      Parallel.run(Parallel.ackSpecs(log, new MemCursorStore(), "c-scans-acks", 4, _ => (),
+        batchSize = batchSize)))
   }
 }
