@@ -106,8 +106,10 @@ final class EventLog(val df: DataFrame,
     if (lookupLimit == Int.MaxValue) after(cursor)
     else after(cursor).limit(lookupLimit)
 
-  /** Current head (max id), or -1 for an empty log. */
-  def head(): Long = {
+  /** Current head, or -1 for an empty log: the committed head, with no
+    * job, when `df` is an unfiltered EventsTable read; else max(id).
+    */
+  def head(): Long = graft.sources.EventsTable.committedHead(df).getOrElse {
     val r = df.agg(max("id")).collect()(0)
     if (r.isNullAt(0)) -1L else r.getLong(0)
   }

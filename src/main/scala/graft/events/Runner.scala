@@ -36,7 +36,9 @@ object Runner {
       ExecutionContext.parasitic).head
 
   /** Ids that close each batch of `batchSize` events in (cursor, head]
-    * — every batchSize-th id by global rank, plus the head — streamed
+    * — every batchSize-th id by global rank, then the head when events
+    * follow the last of those (even if no event has id == head, as
+    * after `forget` of the newest entity) — streamed
     * LAZILY: boundaries are fetched one block-group at a time, so the
     * driver never holds O(batches) longs (10^12 events / batchSize
     * 10^3 would be 8 GB collected eagerly). Live driver state is the
@@ -58,7 +60,7 @@ object Runner {
     val blocks = t.groupBy("blk").agg(count(lit(1)).as("bn"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val offsets = blocks.scanLeft(0L) { case (acc, (_, bn)) => acc + bn }
-    blocks.zip(offsets).grouped(blocksPerGroup).flatMap { group =>
+    val cuts = blocks.zip(offsets).grouped(blocksPerGroup).flatMap { group =>
       val loId = math.max(cursor + 1, group.head._1._1 * (1L << 20))
       val hiId = math.min(head, (group.last._1._1 + 1) * (1L << 20) - 1)
       val offDf = broadcast(
@@ -67,10 +69,11 @@ object Runner {
       t.filter(col("id") >= loId && col("id") <= hiId)
         .withColumn("lrk", row_number().over(local).cast("long"))
         .join(offDf, "blk")
-        .filter((col("lrk") + col("off")) % batchSize === 0 || col("id") === head)
+        .filter((col("lrk") + col("off")) % batchSize === 0)
         .select("id").distinct()
         .collect().map(_.getLong(0)).sorted.iterator
     }
+    cuts ++ Option.when(offsets.last % batchSize != 0)(head)
   }
 
   /** Materializing a batch evaluates the event FILTER; a failure there

@@ -1,7 +1,21 @@
 package graft.sources
 
 import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference,
+  BinaryComparison, BoundReference, ExprId, Expression, Literal, Or, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.events.EventLog
@@ -10,21 +24,30 @@ import graft.events.EventLog
   * inserted transactionally with monotonically increasing ids;
   * rsql/eventstableint.go for int foreign ids).
   *
-  * Spark-first mapping: the log is a parquet directory; an insert is
-  * one append job. Ids are reserved as head+1..head+n and assigned with
-  * zipWithIndex — per-partition offsets, no global sort, so an insert
-  * of 10^9 rows assigns ids with one count and no shuffle.
+  * Spark-first mapping: the log is a parquet directory plus a small
+  * committed manifest in its root (`_graft_manifest`, which Spark's
+  * listing skips). The manifest holds the head and, per committed file,
+  * its path, length, mtime, row count, id range and `date` partition.
+  * Every change writes its files first and then replaces the manifest
+  * with a temp file and one atomic rename; that rename is the commit
+  * (the role the reference's SQL transaction plays), so a reader sees
+  * a whole insert, compaction or forget, or none of it.
   *
-  * The append commits its parquet files one rename at a time, so a
-  * listing can catch an insert half-committed. After the append the
-  * insert therefore writes the committed head to a marker file in the
-  * table root (`_`-prefixed, which Spark's file index skips; written
-  * and renamed into place atomically), and readers take the marker
-  * BEFORE they list the directory and see only `id <= committed head`
-  * — never a partial batch (the role the reference's SQL transaction
-  * plays). The marker is also the head, so ids are never reused after
-  * `forget` drops the newest events. A log without a marker (written
-  * before it existed) reads every file and takes max(id) as its head.
+  *  - Reads never list the directory: `log` and `raw` scan one manifest
+  *    snapshot, and a scan opens only the files whose id range can
+  *    match its pushed `id` bounds and whose date its partition filters
+  *    keep, so a read past a cursor opens only the newest files.
+  *  - `head` is the manifest's, so it runs no job, and it never moves
+  *    back when `forget` drops the newest events: ids are never reused.
+  *  - An insert runs one job, the write. Ids are reserved as
+  *    head+1..head+n and assigned with zipWithIndex — per-partition
+  *    offsets, no global sort and no shuffle; the new files' row counts
+  *    and id ranges come from their footers.
+  *
+  * A log without a manifest (written before it existed) is listed on
+  * every read and cut at its `_graft_head` marker when it has one; its
+  * first insert, compaction, forget or evolve commits a manifest built
+  * from one listing and the files' footers.
   */
 final class EventsTable(spark: SparkSession, dir: String,
     /** partition the log by event date — at 100 TB this is what makes
@@ -130,46 +153,43 @@ final class EventsTable(spark: SparkSession, dir: String,
 
   def exists: Boolean = new java.io.File(dir).exists()
 
-  /** Committed-head marker in the table root (see the class comment). */
-  private val HeadMarker = "_graft_head"
+  /** The table root; the manifest's paths resolve against it. */
+  private val rootDir = Paths.get(dir).toAbsolutePath.normalize
+  private val root = new Path("file", null, rootDir.toString)
 
-  /** The committed head, or None for a log without a marker. */
-  private def committedHead: Option[Long] =
-    try Some(Files.readString(Paths.get(dir, HeadMarker)).trim.toLong)
+  /** The committed-head marker of a log written before the manifest
+    * existed; read only on such logs.
+    */
+  private def legacyMarker: Option[Long] =
+    try Some(Files.readString(Paths.get(dir, "_graft_head")).trim.toLong)
     catch { case _: NoSuchFileException => None }
 
-  /** Atomically (re)write the committed-head marker of the table rooted
-    * at `root`.
-    */
-  private def writeHead(head: Long, root: String = dir): Unit = {
-    val tmp = Paths.get(root, HeadMarker + ".tmp")
-    Files.writeString(tmp, head.toString)
-    Files.move(tmp, Paths.get(root, HeadMarker), StandardCopyOption.ATOMIC_MOVE)
-    ()
+  /** The physical frame over the files of `m`. */
+  private def frame(m: Manifest): DataFrame = {
+    val index = new ManifestIndex(root, m, physical("id"), partitionByDate)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, fullSchema,
+      None, new ParquetFileFormat, Map.empty)(spark))
   }
-
-  /** Copy the marker into a staging directory that is about to replace
-    * the table root, so the swap keeps it.
-    */
-  private def carryHead(staging: String): Unit = committedHead.foreach(writeHead(_, staging))
 
   /** The committed events with their canonical names. The schema is
     * explicit on every path: a typed metadata projection added mid-log
     * means old files lack the column, and schema inference would
     * surface whichever file's footer Spark samples, while an explicit
     * schema reads every file with the merged shape (absent columns come
-    * back null until `evolve()` backfills them). The date partition
-    * column is named in the schema so partitioned reads stay prunable.
+    * back null until `evolve()` backfills them). A log without a
+    * manifest is listed, and cut at its marker when it has one.
     */
   private def read(keepDate: Boolean): DataFrame = {
-    val committed = committedHead // before the read lists the files
-    val df = canonicalize(
-      if (partitionByDate)
-        spark.read.schema(StructType(fullSchema.fields :+
-          StructField("date", DateType))).parquet(dir)
-      else spark.read.schema(fullSchema).parquet(dir))
-    val visible = committed.fold(df)(h => df.filter(col("id") <= h))
-    if (partitionByDate && !keepDate) visible.drop("date") else visible
+    val df = Manifest.read(dir) match {
+      case Some(m) => canonicalize(frame(m))
+      case None =>
+        val marker = legacyMarker // before the read lists the files
+        val listed = canonicalize(spark.read.schema(
+          if (partitionByDate) StructType(fullSchema.fields :+ StructField("date", DateType))
+          else fullSchema).parquet(dir))
+        marker.fold(listed)(h => listed.filter(col("id") <= h))
+    }
+    if (partitionByDate && !keepDate) df.drop("date") else df
   }
 
   def log: EventLog = new EventLog(read(keepDate = false), lookupLimit)
@@ -179,118 +199,146 @@ final class EventsTable(spark: SparkSession, dir: String,
     */
   def raw: DataFrame = read(keepDate = true)
 
-  /** The committed head: the marker, else max(id); -1 for no log. */
-  def head: Long = committedHead.getOrElse(if (!exists) -1L else log.head())
+  /** The committed head: the manifest's; on a log without one, its
+    * marker, else max(id); -1 for no log.
+    */
+  def head: Long = Manifest.read(dir).map(_.head)
+    .getOrElse(legacyMarker.getOrElse(if (!exists) -1L else log.head()))
+
+  /** The committed manifest. A log without one is adopted from one
+    * listing and its files' footers, with the larger of its marker and
+    * its largest id as the head; the first change to it commits that.
+    */
+  private def snapshot(): Manifest = Manifest.read(dir).getOrElse {
+    val base = Paths.get(dir)
+    val files = dataFiles(base).map(rel => describe(base.resolve(rel), rel)).filter(_.rows > 0)
+    Manifest((legacyMarker.toSeq ++ files.map(_.maxId)).maxOption.getOrElse(-1L), files)
+  }
+
+  /** Relative paths of the parquet files under `base` that Spark's
+    * listing would read: no `_`- or `.`-prefixed name on the way.
+    */
+  private def dataFiles(base: java.nio.file.Path): Vector[String] =
+    if (!Files.isDirectory(base)) Vector.empty
+    else Using.resource(Files.walk(base)) { paths =>
+      paths.iterator.asScala.map(base.relativize).filter { rel =>
+        rel.toString.endsWith(".parquet") && Files.isRegularFile(base.resolve(rel)) &&
+          rel.iterator.asScala.forall(n => !n.toString.startsWith("_") && !n.toString.startsWith("."))
+      }.map(_.toString).toVector
+    }
+
+  private def footer(file: java.nio.file.Path): ParquetMetadata =
+    Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(file.toUri), spark.sparkContext.hadoopConfiguration)))(_.getFooter)
+
+  /** The manifest entry of `file`, to be committed at `rel`: row count
+    * and id range from its footer, `date` from its partition directory.
+    */
+  private def describe(file: java.nio.file.Path, rel: String): LogFile = {
+    val blocks = footer(file).getBlocks.asScala.filter(_.getRowCount > 0)
+    val ids = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == physical("id"))
+      .map(_.getStatistics).filter(_.hasNonNullValue)
+      .getOrElse(throw new IllegalStateException(s"$file: no id statistics in its footer")))
+    def bound(s: Statistics[_], max: Boolean): Long =
+      (if (max) s.genericGetMax else s.genericGetMin).asInstanceOf[java.lang.Long].longValue
+    LogFile(rel, Files.size(file), Files.getLastModifiedTime(file).toMillis,
+      blocks.map(_.getRowCount).sum, ids.map(bound(_, max = false)).minOption.getOrElse(0L),
+      ids.map(bound(_, max = true)).maxOption.getOrElse(-1L),
+      Option.when(partitionByDate)(rel.takeWhile(_ != '/').stripPrefix("date=")))
+  }
+
+  /** Writes `df` (with its `date` column on a partitioned log) to a
+    * staging directory beside the root, moves its non-empty files into
+    * the table's layout and returns their entries. Nothing is
+    * committed: no reader sees the files until a manifest names them.
+    */
+  private def stage(df: DataFrame): Seq[LogFile] = {
+    val staging = rootDir.resolveSibling(s"${rootDir.getFileName}.staging-${java.util.UUID.randomUUID}")
+    (if (partitionByDate) df.write.partitionBy("date") else df.write).parquet(staging.toString)
+    try dataFiles(staging).map(rel => describe(staging.resolve(rel), rel))
+      .filter(_.rows > 0).map { f =>
+        val dst = Paths.get(dir, f.path)
+        Files.createDirectories(dst.getParent)
+        Files.move(staging.resolve(f.path), dst, StandardCopyOption.ATOMIC_MOVE)
+        f
+      }
+    finally graft.util.AtomicDir.deleteRec(staging)
+  }
+
+  /** Commits the files `gone` replaced by `added`, then deletes `gone`:
+    * a reader sees the old files or the new ones, never a mix. The
+    * manifest is re-read first, so an insert that committed since `m`
+    * was read stays in it.
+    */
+  private def swap(m: Manifest, gone: Seq[LogFile], added: Seq[LogFile]): Unit = {
+    val drop = gone.map(_.path).toSet
+    val now = Manifest.read(dir).getOrElse(m)
+    Manifest.write(dir, now.copy(files = now.files.filterNot(f => drop(f.path)) ++ added))
+    gone.foreach { f =>
+      val p = Paths.get(dir, f.path)
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
+  }
+
+  /** `df` with every typed metadata projection computed from its JSON:
+    * insert, compact and evolve share it, so a rewritten value is
+    * bit-identical to the write-time one.
+    */
+  private def withMetas(df: DataFrame): DataFrame = metaColumns.foldLeft(df) { (acc, m) =>
+    acc.withColumn(m.name, get_json_object(col(physical("metadata")), m.jsonPath).cast(m.dataType))
+  }
 
   /** Right-to-be-forgotten compaction: rewrite the log without the
     * entity's events. Remaining ids are untouched (monotonicity
     * preserved; the resulting id gaps are exactly what the gap-fill
     * machinery tolerates — rsql/gapfill.go semantics).
     *
-    * On a date-partitioned log only the partitions that actually
-    * contain the entity's events are rewritten and atomically swapped
-    * — O(entity's date spread), not O(log). Untouched partitions are
-    * never read or written (the date IN-list prunes the scan).
-    * Unpartitioned logs fall back to a whole-directory atomic swap.
-    * Concurrent readers see each partition old-or-new, never partial.
-    * Returns the head, which does not move.
+    * One scan finds the files that hold the entity's events; only those
+    * are rewritten, so the cost is O(entity's file spread), not O(log).
+    * The rewritten files replace them in one manifest commit, so a
+    * reader sees the log before or after, never partial. Returns the
+    * head, which does not move: when the entity owns the newest events,
+    * their ids are still never handed to a later insert.
     */
   def forget(foreignId: Long): Long = {
-    // Pinned before the rewrite: when the entity owns the newest events,
-    // max(id) drops, and a head read from it would hand their ids to the
-    // next insert — past the cursor of a consumer that already saw them.
-    val pinned = head
-    if (partitionByDate) {
-      val touched = raw.filter(col("foreignId") === foreignId)
-        .select("date").distinct().collect().map(_.getDate(0)).toSeq
-      if (touched.isEmpty) return pinned
-      writeHead(pinned)
-      val remaining = raw
-        .filter(col("date").isin(touched: _*) && col("foreignId") =!= foreignId)
-      val staging = dir + ".staging"
-      graft.util.AtomicDir.deleteRec(staging)
-      physicalize(remaining).write.partitionBy("date").parquet(staging)
-      touched.foreach { d =>
-        val src = java.nio.file.Paths.get(staging, s"date=$d")
-        val dst = java.nio.file.Paths.get(dir, s"date=$d")
-        // a partition whose every row belonged to the entity is absent
-        // from staging → remove it from the live log
-        if (java.nio.file.Files.exists(src)) graft.util.AtomicDir.replace(src, dst)
-        else graft.util.AtomicDir.remove(dst)
-      }
-      graft.util.AtomicDir.deleteRec(staging)
-    } else {
-      val remaining = log.df.filter(col("id").isNotNull && col("foreignId") =!= foreignId)
-      val tmp = dir + ".tmp"
-      graft.util.AtomicDir.deleteRec(tmp)
-      physicalize(remaining).write.mode(SaveMode.Overwrite).parquet(tmp)
-      writeHead(pinned, tmp)
-      graft.util.AtomicDir.replace(tmp, dir)
-    }
-    pinned
+    val m = snapshot()
+    val entity = col("foreignId") <=> foreignId
+    val hit = canonicalize(frame(m)).filter(entity).select(input_file_name())
+      .distinct().collect().map(r => Paths.get(new java.net.URI(r.getString(0)))).toSet
+    val gone = m.files.filter(f => hit(rootDir.resolve(f.path)))
+    if (gone.nonEmpty)
+      swap(m, gone, stage(physicalize(canonicalize(frame(m.copy(files = gone))).filter(!entity))))
+    m.head
   }
 
   /** Small-file compaction (the OPTIMIZE step a streaming ingest needs
     * forever: every micro-batch append is its own parquet file, so an
-    * uncompacted log's file count grows without bound and every read
-    * pays O(batches) footer opens). Each partition (date dirs on a
-    * partitioned log; the whole directory otherwise) whose file count
-    * exceeds ceil(bytes/targetBytes) is rewritten into that many
-    * id-range-partitioned, id-sorted files and atomically swapped —
-    * the same old-or-new discipline as `forget`/StateTable.merge, at
-    * the same partition granularity a table format would commit.
+    * uncompacted log's file count grows without bound). Each partition
+    * (date on a partitioned log; the whole log otherwise) whose file
+    * count exceeds ceil(bytes/targetBytes) is rewritten into that many
+    * id-range-partitioned, id-sorted files, and all rewritten
+    * partitions replace their files in one manifest commit.
     *
     * Rows, ids, and the head are untouched (content-preserving
     * rewrite); sorting by id makes each output file a disjoint id
-    * range, so footer min/max zone maps turn cursor reads
-    * (`id > cursor`) into file skips — after compaction a consumer
-    * near the head opens O(1) files per partition, not O(batches).
-    * Returns the number of partitions rewritten.
+    * range, so cursor reads (`id > cursor`) skip files by the
+    * manifest's id ranges — after compaction a consumer near the head
+    * opens O(1) files per partition, not O(batches). Returns the number
+    * of partitions rewritten.
     */
   def compact(targetBytes: Long = 128L << 20): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return 0
-    // Stage OUTSIDE the table root (sibling <root>.compacting/date=X):
-    // a staging dir inside the root would be picked up by Spark
-    // partition discovery as just another partition, so a concurrent
-    // reader during the write→swap window — or any reader after a
-    // crash that leaves it behind — would see the partition's rows
-    // twice. Leftovers from a crashed run are swept up front.
-    val stagingRoot = new org.apache.hadoop.fs.Path(root.toString + ".compacting")
-    graft.util.AtomicDir.deleteRec(stagingRoot.toUri.getPath)
-    val parts: Seq[org.apache.hadoop.fs.Path] =
-      if (partitionByDate)
-        fs.listStatus(root).filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("date=")).map(_.getPath).toSeq
-      else Seq(root)
-    var rewritten = 0
-    parts.foreach { p =>
-      val files = fs.listStatus(p).filter(st => st.isFile &&
-        st.getPath.getName.endsWith(".parquet"))
-      val bytes = files.map(_.getLen).sum
-      val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      if (files.length > want) {
-        val idCol = col(physical("id"))
-        val staging =
-          if (partitionByDate) new org.apache.hadoop.fs.Path(stagingRoot, p.getName)
-          else stagingRoot
-        graft.util.AtomicDir.deleteRec(staging.toUri.getPath)
-        spark.read.parquet(p.toString)
-          .repartitionByRange(want, idCol)
-          .sortWithinPartitions(idCol)
-          .write.parquet(staging.toString)
-        // drop the _SUCCESS marker so the swapped dir holds data files
-        // only, like the append-written partitions it replaces
-        fs.delete(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), false)
-        if (!partitionByDate) carryHead(staging.toUri.getPath)
-        graft.util.AtomicDir.replace(staging.toUri.getPath, p.toUri.getPath)
-        rewritten += 1
-      }
+    if (!exists) return 0
+    val m = snapshot()
+    val idCol = col(physical("id"))
+    val order = (if (partitionByDate) Seq(col("date")) else Nil) :+ idCol
+    val rewrites = m.files.groupBy(_.date).values.toSeq.flatMap { files =>
+      val want = math.max(1L, (files.map(_.length).sum + targetBytes - 1) / targetBytes).toInt
+      Option.when(files.size > want)(files -> stage(withMetas(frame(m.copy(files = files)))
+        .repartitionByRange(want, idCol).sortWithinPartitions(order: _*)))
     }
-    graft.util.AtomicDir.deleteRec(stagingRoot.toUri.getPath)
-    rewritten
+    if (rewrites.nonEmpty) swap(m, rewrites.flatMap(_._1), rewrites.flatMap(_._2))
+    rewrites.size
   }
 
   /** Schema evolution (reference intent: rsql/eventstable.go:67–120
@@ -298,94 +346,201 @@ final class EventsTable(spark: SparkSession, dir: String,
     * file's): backfill typed metadata projections (`metaColumns`)
     * that were added AFTER part of the log was written. Old files
     * lack the physical column and read as null through the explicit
-    * merged schema; evolve rewrites exactly the partitions containing
-    * such files — recomputing every projection from the metadata JSON
-    * with the same expression `insert` uses, so backfilled values are
-    * bit-identical to write-time ones — and atomically swaps each
-    * partition under the same old-or-new discipline as
-    * `compact`/`forget`. After evolve, every file carries the typed
-    * column with real parquet min/max stats, so filters on it prune
-    * files instead of re-parsing JSON. Untouched partitions are never
-    * read or written. Returns the number of partitions rewritten.
+    * merged schema; evolve rewrites exactly the files whose footer
+    * lacks a projection — recomputing every projection from the
+    * metadata JSON with the same expression `insert` uses — and
+    * replaces them in one manifest commit. After evolve, every file
+    * carries the typed column with real parquet min/max stats, so
+    * filters on it prune files instead of re-parsing JSON. Returns the
+    * number of partitions rewritten.
     */
   def evolve(): Int = {
     if (!exists || metaColumns.isEmpty) return 0
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val stagingRoot = new org.apache.hadoop.fs.Path(root.toString + ".evolving")
-    graft.util.AtomicDir.deleteRec(stagingRoot.toUri.getPath)
-    val parts: Seq[org.apache.hadoop.fs.Path] =
-      if (partitionByDate)
-        fs.listStatus(root).filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("date=")).map(_.getPath).toSeq
-      else Seq(root)
-    var rewritten = 0
-    parts.foreach { p =>
-      val files = fs.listStatus(p).filter(st => st.isFile &&
-        st.getPath.getName.endsWith(".parquet")).map(_.getPath)
-      // footer check per file: does any file miss a projection column?
-      val needs = files.exists { f =>
-        val have = spark.read.parquet(f.toString).schema.fieldNames.toSet
-        metaColumns.exists(m => !have.contains(m.name))
-      }
-      if (needs) {
-        val base = spark.read.schema(fullSchema).parquet(p.toString)
-        val df = metaColumns.foldLeft(base) { (acc, m) =>
-          acc.withColumn(m.name,
-            get_json_object(col(physical("metadata")), m.jsonPath).cast(m.dataType))
-        }
-        val staging =
-          if (partitionByDate) new org.apache.hadoop.fs.Path(stagingRoot, p.getName)
-          else stagingRoot
-        graft.util.AtomicDir.deleteRec(staging.toUri.getPath)
-        df.write.parquet(staging.toString)
-        fs.delete(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), false)
-        if (!partitionByDate) carryHead(staging.toUri.getPath)
-        graft.util.AtomicDir.replace(staging.toUri.getPath, p.toUri.getPath)
-        rewritten += 1
-      }
+    val m = snapshot()
+    val stale = m.files.filter { f =>
+      val have = footer(Paths.get(dir, f.path)).getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSet
+      metaColumns.exists(c => !have(c.name))
     }
-    graft.util.AtomicDir.deleteRec(stagingRoot.toUri.getPath)
-    rewritten
+    if (stale.nonEmpty) swap(m, stale, stage(withMetas(frame(m.copy(files = stale)))))
+    stale.map(_.date).distinct.size
   }
 
   /** Insert a batch of events (columns: eventType, foreignId, ts,
     * value, metadata, optional trace), assigning the next id range.
     * Returns the new head.
+    *
+    * The only job is the write (plus zipWithIndex's count of the
+    * partitions, for a frame with more than one). The new files' row
+    * counts and id ranges come from their footers, and the commit point
+    * is the manifest that adds them: a reader sees all of the insert or
+    * none of it (the role the reference's SQL transaction plays).
     */
   def insert(events: DataFrame): Long = {
-    val base = head
+    val m = snapshot()
     val cols = Seq("eventType", "foreignId", "ts", "value", "metadata")
     val traceCol =
       if (events.columns.contains("trace")) col("trace").cast("binary")
       else lit(null).cast("binary")
     val src = events.select(cols.map(col) :+ traceCol.as("trace"): _*)
-    val rdd = src.rdd.zipWithIndex()
-    val withIds = rdd.map { case (r, i) =>
-      Row.fromSeq((base + 1 + i) +: r.toSeq)
+    val withIds = src.rdd.zipWithIndex().map { case (r, i) =>
+      Row.fromSeq((m.head + 1 + i) +: r.toSeq)
     }
-    val df0 = spark.createDataFrame(withIds, schema)
     // typed metadata projections: parse the JSON ONCE here at write,
     // never again on any read
-    val df = metaColumns.foldLeft(df0) { (acc, m) =>
-      acc.withColumn(m.name,
-        get_json_object(col(physical("metadata")), m.jsonPath).cast(m.dataType))
-    }
-    val writer =
-      if (partitionByDate)
-        df.withColumn("date", to_date(col(physical("ts")))).write.partitionBy("date")
-      else df.write
-    writer.mode(SaveMode.Append).parquet(dir)
-    // new head = base + batch size; O(batch), not a re-scan of the
-    // whole log (which made every single-row append O(log size)).
-    val newHead = base + rdd.count()
-    writeHead(newHead) // the commit point
+    val df = withMetas(spark.createDataFrame(withIds, schema))
+    val added = stage(
+      if (partitionByDate) df.withColumn("date", to_date(col(physical("ts")))) else df)
+    val newHead = m.head + added.map(_.rows).sum
+    Manifest.write(dir, Manifest(newHead, m.files ++ added)) // the commit point
     // post-commit notify (the reference returns a NotifyFunc to call
     // after tx commit — rsql/eventstable.go:245)
     notifier.foreach(_.notifyInsert())
     newHead
   }
+}
+
+object EventsTable {
+
+  /** The committed head of `df` when it is an unfiltered manifest-backed
+    * read — a manifest scan under projections that pass `id` through —
+    * without running a job; None for any other frame.
+    */
+  def committedHead(df: DataFrame): Option[Long] = {
+    def trace(plan: LogicalPlan, id: ExprId): Option[Long] = plan match {
+      case Project(list, child) => list.collectFirst {
+        case a: Attribute if a.exprId == id => a.exprId
+        case a @ Alias(from: Attribute, _) if a.exprId == id => from.exprId
+      }.flatMap(trace(child, _))
+      case LogicalRelation(r: HadoopFsRelation, out, _, _, _) => r.location match {
+        case m: ManifestIndex if out.exists(a => a.exprId == id && a.name == m.idName) =>
+          Some(m.manifest.head)
+        case _ => None
+      }
+      case _ => None
+    }
+    val plan = df.queryExecution.analyzed
+    plan.output.find(_.name == "id").flatMap(a => trace(plan, a.exprId))
+  }
+}
+
+/** One committed data file of a manifest-backed log: its path under the
+  * table root, length, mtime, row count, id range and, on a
+  * date-partitioned log, its `date` partition value.
+  */
+private[sources] final case class LogFile(path: String, length: Long, mtime: Long,
+    rows: Long, minId: Long, maxId: Long, date: Option[String])
+
+/** A committed snapshot of a log: its head, the highest id ever
+  * assigned (which `forget` never lowers), and the files of its events.
+  */
+private[sources] final case class Manifest(head: Long, files: Seq[LogFile])
+
+private[sources] object Manifest {
+  private val Name = "_graft_manifest"
+  private val Version = "graft-manifest 1"
+
+  /** The manifest of the table rooted at `dir`; None when it has none. */
+  def read(dir: String): Option[Manifest] =
+    try {
+      val lines = Files.readAllLines(Paths.get(dir, Name)).asScala
+      require(lines.headOption.contains(Version), s"unknown manifest format in $dir")
+      Some(Manifest(lines(1).stripPrefix("head\t").toLong, lines.drop(2).map { l =>
+        val f = l.split('\t')
+        LogFile(f(0), f(1).toLong, f(2).toLong, f(3).toLong, f(4).toLong, f(5).toLong,
+          Option.when(f(6) != "-")(f(6)))
+      }.toVector))
+    } catch { case _: NoSuchFileException => None }
+
+  /** Atomically replaces the manifest of the table rooted at `dir`. */
+  def write(dir: String, m: Manifest): Unit = {
+    val lines = Seq(Version, s"head\t${m.head}") ++ m.files.map(f =>
+      Seq(f.path, f.length, f.mtime, f.rows, f.minId, f.maxId, f.date.getOrElse("-")).mkString("\t"))
+    Files.createDirectories(Paths.get(dir))
+    val tmp = Paths.get(dir, s"$Name.${java.util.UUID.randomUUID}.tmp")
+    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
+    Files.move(tmp, Paths.get(dir, Name), StandardCopyOption.ATOMIC_MOVE)
+    ()
+  }
+}
+
+/** Spark's view of one manifest snapshot. `listFiles` never lists the
+  * directory: it returns the snapshot's files minus those whose id
+  * range no pushed `id` comparison can match, grouped into the `date`
+  * partitions the partition filters keep. Equality includes the
+  * snapshot, so Spark's CacheManager never serves one snapshot's cached
+  * data for another's.
+  */
+private[sources] final class ManifestIndex(root: Path, val manifest: Manifest,
+    val idName: String, partitioned: Boolean) extends FileIndex {
+
+  override def rootPaths: Seq[Path] = Seq(root)
+
+  override val partitionSchema: StructType =
+    if (partitioned) StructType(Seq(StructField("date", DateType))) else new StructType()
+
+  override def inputFiles: Array[String] =
+    manifest.files.map(f => new Path(root, f.path).toString).toArray
+
+  override def refresh(): Unit = ()
+
+  override def sizeInBytes: Long = manifest.files.map(_.length).sum
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    def status(f: LogFile) = FileStatusWithMetadata(
+      new FileStatus(f.length, false, 1, 32L << 20, f.mtime, new Path(root, f.path)))
+    val files = manifest.files.filter(f => dataFilters.forall(mayHold(_, f.minId, f.maxId)))
+    if (!partitioned) Seq(PartitionDirectory(InternalRow.empty, files.map(status)))
+    else {
+      val keep = partitionFilters.reduceOption(And).map(p => Predicate.createInterpreted(
+        p.transform { case _: AttributeReference => BoundReference(0, DateType, nullable = true) }))
+      files.groupBy(_.date).toSeq.map { case (d, fs) =>
+        val day = d.filter(_ != "__HIVE_DEFAULT_PARTITION__")
+          .map(v => java.time.LocalDate.parse(v).toEpochDay.toInt)
+        PartitionDirectory(InternalRow(day.orNull), fs.map(status))
+      }.filter(p => keep.forall(_.eval(p.values)))
+    }
+  }
+
+  /** Whether a file whose ids span [lo, hi] may hold a row passing `e`:
+    * false only when `e` compares `id` with a literal in a way no id in
+    * the span satisfies.
+    */
+  private def mayHold(e: Expression, lo: Long, hi: Long): Boolean = {
+    def isId(x: Expression) = x match {
+      case a: AttributeReference => a.name == idName
+      case _ => false
+    }
+    def admits(op: String, v: Long) = op match {
+      case ">" => hi > v
+      case ">=" => hi >= v
+      case "<" => lo < v
+      case "<=" => lo <= v
+      case "=" | "<=>" => lo <= v && v <= hi
+      case _ => true
+    }
+    val flip = Map(">" -> "<", ">=" -> "<=", "<" -> ">", "<=" -> ">=")
+    e match {
+      case And(l, r) => mayHold(l, lo, hi) && mayHold(r, lo, hi)
+      case Or(l, r) => mayHold(l, lo, hi) || mayHold(r, lo, hi)
+      case c: BinaryComparison => (c.left, c.right) match {
+        case (x, Literal(v: Long, LongType)) if isId(x) => admits(c.symbol, v)
+        case (Literal(v: Long, LongType), x) if isId(x) =>
+          admits(flip.getOrElse(c.symbol, c.symbol), v)
+        case _ => true
+      }
+      case _ => true
+    }
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestIndex => m.rootPaths == rootPaths && m.manifest == manifest &&
+      m.idName == idName && m.partitionSchema == partitionSchema
+    case _ => false
+  }
+
+  override def hashCode: Int = (root, manifest).hashCode
 }
 
 /** A typed metadata projection: JSON path `jsonPath` of the event

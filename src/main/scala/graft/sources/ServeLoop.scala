@@ -17,8 +17,9 @@ import graft.events.ReflexPb.PbStreamRequest
   * Each chunk is one pushed-down `id > cursor AND id <= head` range
   * scan + `limit chunk`, so a serve from a late cursor never rescans
   * the whole log and the per-connection state is one long. At the head
-  * the loop parks on the watcher (wake-on-insert) or, unwatched, sleeps
-  * out `pollMs`. A transport supplies only the parsed request and a
+  * (an empty chunk, or a short one outside `toHead` and `lagMs`) the
+  * loop parks on the watcher (wake-on-insert) or, unwatched, sleeps out
+  * `pollMs`. A transport supplies only the parsed request and a
   * sink for encoded chunks.
   */
 private[sources] final class ServeLoop(log: () => DataFrame, pollMs: Long, chunk: Int,
@@ -43,7 +44,11 @@ private[sources] final class ServeLoop(log: () => DataFrame, pollMs: Long, chunk
         if (!sink(rows.map(framing.encode))) return false
         cursor = rows.last.getLong(0)
       } else if (req.toHead) return true
-      else wake.awaitNotify(epoch, pollMs)
+      // A short chunk held everything committed before the scan, so with
+      // no notify since `epoch` a re-query would come back empty. Under
+      // a lag, held-back events become visible with time instead.
+      if (rows.isEmpty || (rows.length < chunk && !req.toHead && req.lagMs <= 0))
+        wake.awaitNotify(epoch, pollMs)
     }
     true
   }

@@ -24,7 +24,7 @@ object AtomicDir {
     */
   def replace(src: Path, dst: Path): Unit = {
     // Dot-prefixed so that when dst is a partition dir inside a table
-    // root (EventsTable.compact swaps date=X), the transient parked
+    // root (StateTable.merge swaps bucket=X), the transient parked
     // copy is invisible to Spark partition discovery (InMemoryFileIndex
     // skips '.'/'_'-prefixed paths) — a concurrent reader never sees
     // the partition twice.

@@ -28,6 +28,38 @@ class RunnerSpec extends AnyFunSuite {
     assert(res2.consumed === 0L)
   }
 
+  test("after forget of the newest entity, the last window still closes at the pinned head") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-forget-newest")
+      .resolve("log").toString
+    val table = new graft.sources.EventsTable(spark, dir)
+    // ids 0..24; entity 9 owns the newest three
+    table.insert((0 until 25).map(i => ("click", if (i >= 22) 9L else (i % 4).toLong,
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0, "{}"))
+      .toDF("eventType", "foreignId", "ts", "value", "metadata"))
+    assert(table.forget(9L) === 24L)
+    assert(table.head === 24L)
+    val remaining = (0L to 21L)
+    def ids(b: DataFrame): Seq[Long] = b.select("id").collect().map(_.getLong(0)).toSeq
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val store = new MemCursorStore()
+    val res = Runner.runToHead(Spec(table.log, store,
+      Consumer("c-forgot", b => ids(b).foreach(seen.add)), batchSize = 10))
+    assert(seen.toArray.toSeq.map(_.asInstanceOf[Long]).sorted === remaining)
+    assert(res.consumed === 22L)
+    assert(res.finalCursor === 24L)
+    assert(store.get("c-forgot") === Some(24L))
+
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val shardSeen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val pres = Runner.runParallel(Spec(table.log, new MemCursorStore(),
+      Consumer("c-forgot-par", b => ids(b).foreach(shardSeen.add)), batchSize = 10), 4)
+    assert(shardSeen.toArray.toSeq.map(_.asInstanceOf[Long]).sorted === remaining)
+    assert(pres.map(_.consumed).sum === 22L)
+    assert(pres.forall(_.finalCursor === 24L), pres.toString)
+  }
+
   test("filters advance the cursor past filtered-out events (reflex semantics)") {
     val store = new MemCursorStore()
     var n = 0L

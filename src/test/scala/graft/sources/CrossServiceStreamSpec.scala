@@ -196,15 +196,15 @@ class CrossServiceStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-xsvc-midcommit").resolve("log").toString
     val table = mkTable(5, dir) // ids 0..4, committed head 4
     // a later insert half-way through: its parquet file (ids 5..7) is in
-    // the log directory, its committed-head marker not yet written
+    // the log directory, its manifest not yet committed
     val staged = Files.createTempDirectory("graft-xsvc-staged").resolve("part").toString
     val ts = java.sql.Timestamp.valueOf("2024-01-01 01:00:00")
     spark.createDataFrame(java.util.Arrays.asList((5L to 7L).map(i =>
       Row(i, "late", 9L, ts, 1.0, "{}", null)): _*), table.schema)
       .coalesce(1).write.parquet(staged)
-    Files.list(Paths.get(staged)).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .foreach(f => Files.move(f, Paths.get(dir, f.getFileName.toString)))
+    val file = Files.list(Paths.get(staged)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+    val landed = Files.move(file, Paths.get(dir, file.getFileName.toString))
 
     val store = new MemCursorStore()
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -220,8 +220,10 @@ class CrossServiceStreamSpec extends AnyFunSuite {
     assert(Runner.lag(table.log, store, "mid-commit")._1 === 0L)
     served(-1L).foreach { case (name, ids) => assert(ids === (0L to 4L), name) }
 
-    // the insert commits
-    Files.writeString(Paths.get(dir, "_graft_head"), "7")
+    // the insert commits: a manifest that adds the file and moves the head
+    val before = Manifest.read(dir).get
+    Manifest.write(dir, Manifest(7L, before.files :+ LogFile(landed.getFileName.toString,
+      Files.size(landed), Files.getLastModifiedTime(landed).toMillis, 3L, 5L, 7L, None)))
     assert(Runner.lag(table.log, store, "mid-commit")._1 === 3L)
     assert(drain().finalCursor === 7L)
     assert(seen.asScala.toSeq.sorted === (0L to 7L), "each event exactly once")
@@ -258,6 +260,52 @@ class CrossServiceStreamSpec extends AnyFunSuite {
       assert(wakeMs < 30000L,
         s"event took ${wakeMs}ms to arrive — insert did not wake the 60s poll park")
     } finally server.close()
+  }
+
+  test("a watched server runs one chunk query per delivered insert") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft-xsvc-chunks").resolve("log").toString
+    val table = new EventsTable(spark, dir, notifier = Some(new graft.events.InMemNotifier))
+    insert(table, 3)
+    val chunks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = tally(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = tally(qe)
+      // a chunk query is the one that projects ts_ms
+      private def tally(qe: QueryExecution): Unit =
+        if (qe.analyzed.output.exists(_.name == "ts_ms")) { chunks.incrementAndGet(); () }
+    }
+    val server = new EventStreamServer(() => table.log.df, pollMs = 60000L, chunk = 100,
+      watcher = Some(table.watcher))
+    spark.listenerManager.register(listener)
+    val inserts = 5
+    try {
+      val sock = new java.net.Socket("localhost", server.boundPort)
+      sock.setSoTimeout(WaitMs)
+      try {
+        new java.io.PrintWriter(sock.getOutputStream, true)
+          .println("""{"after":-1,"toHead":false}""")
+        val in = new java.io.BufferedReader(
+          new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+        (0 until 3).foreach(_ => assert(in.readLine() != null))
+        (0 until inserts).foreach { i =>
+          insert(table, 1)
+          val line = in.readLine()
+          assert(line != null && line.contains(s""""id":${3 + i}"""), line)
+        }
+      } finally sock.close()
+      // the catch-up's chunk plus one per insert; the old loop re-queried
+      // after every short chunk, which came back empty
+      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+      while (chunks.get() < 1 + inserts && System.nanoTime() < deadline) Thread.sleep(10)
+      Thread.sleep(200)
+      assert(chunks.get() >= 1 + inserts, "every delivery came from a chunk query")
+      assert(chunks.get() <= 1 + inserts, s"${chunks.get()} chunk queries for $inserts inserts")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      server.close()
+    }
   }
 
   test("server detects client disconnect during a long poll and frees the handler") {
