@@ -44,10 +44,18 @@ import graft.events.EventLog
   *    offsets, no global sort and no shuffle; the new files' row counts
   *    and id ranges come from their footers.
   *
+  * Changes to one log are serialized within a JVM: inserts commit one
+  * at a time, and compact, forget and evolve run one at a time, each
+  * committing from a fresh read of the manifest. A log has one writing
+  * process; readers may be anywhere. A change that crashes leaves only
+  * files no manifest names (a staging directory beside the root, data
+  * files moved into the root but not committed, or replaced files not
+  * yet deleted); the next compact, forget or evolve deletes them.
+  *
   * A log without a manifest (written before it existed) is listed on
   * every read and cut at its `_graft_head` marker when it has one; its
-  * first insert, compaction, forget or evolve commits a manifest built
-  * from one listing and the files' footers.
+  * first insert, compaction, forget or evolve first commits a manifest
+  * built from one listing and the files' footers.
   */
 final class EventsTable(spark: SparkSession, dir: String,
     /** partition the log by event date — at 100 TB this is what makes
@@ -156,6 +164,7 @@ final class EventsTable(spark: SparkSession, dir: String,
   /** The table root; the manifest's paths resolve against it. */
   private val rootDir = Paths.get(dir).toAbsolutePath.normalize
   private val root = new Path("file", null, rootDir.toString)
+  private val locks = EventsTable.locksOf(rootDir)
 
   /** The committed-head marker of a log written before the manifest
     * existed; read only on such logs.
@@ -205,14 +214,17 @@ final class EventsTable(spark: SparkSession, dir: String,
   def head: Long = Manifest.read(dir).map(_.head)
     .getOrElse(legacyMarker.getOrElse(if (!exists) -1L else log.head()))
 
-  /** The committed manifest. A log without one is adopted from one
-    * listing and its files' footers, with the larger of its marker and
-    * its largest id as the head; the first change to it commits that.
+  /** The committed manifest, read with the commit lock held. A log
+    * without one is adopted from one listing and its files' footers,
+    * with the larger of its marker and its largest id as the head, and
+    * that manifest is committed before the change writes anything: what
+    * the change leaves if it crashes is then debris `sweep` can tell.
     */
   private def snapshot(): Manifest = Manifest.read(dir).getOrElse {
-    val base = Paths.get(dir)
-    val files = dataFiles(base).map(rel => describe(base.resolve(rel), rel)).filter(_.rows > 0)
-    Manifest((legacyMarker.toSeq ++ files.map(_.maxId)).maxOption.getOrElse(-1L), files)
+    val files = dataFiles(rootDir).map(rel => describe(rootDir.resolve(rel), rel)).filter(_.rows > 0)
+    val m = Manifest((legacyMarker.toSeq ++ files.map(_.maxId)).maxOption.getOrElse(-1L), files)
+    if (Files.isDirectory(rootDir)) Manifest.write(dir, m)
+    m
   }
 
   /** Relative paths of the parquet files under `base` that Spark's
@@ -265,20 +277,57 @@ final class EventsTable(spark: SparkSession, dir: String,
     finally graft.util.AtomicDir.deleteRec(staging)
   }
 
+  /** Deletes the data file at `rel` under the root and its checksum. */
+  private def remove(rel: String): Unit = {
+    val p = rootDir.resolve(rel)
+    Files.deleteIfExists(p)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    ()
+  }
+
+  /** Deletes what a crashed change left: staging directories beside the
+    * root, manifest temp files, and data files under the root that `m`
+    * does not name. Runs with both locks held, so no change of this JVM
+    * is between writing its files and committing them.
+    */
+  private def sweep(m: Manifest): Unit = {
+    val parent = rootDir.getParent
+    val staging = s"${rootDir.getFileName}.staging-"
+    if (Files.isDirectory(parent))
+      Using.resource(Files.list(parent))(_.iterator.asScala
+        .filter(_.getFileName.toString.startsWith(staging)).toVector)
+        .foreach(graft.util.AtomicDir.deleteRec)
+    if (Files.isDirectory(rootDir)) {
+      Using.resource(Files.list(rootDir))(_.iterator.asScala
+        .filter(p => Manifest.isTemp(p.getFileName.toString)).toVector)
+        .foreach(Files.deleteIfExists)
+      val named = m.files.map(_.path).toSet
+      dataFiles(rootDir).filterNot(named).foreach(remove)
+    }
+  }
+
+  /** Runs a rewrite (compact, forget, evolve) on the committed manifest:
+    * one rewrite at a time per log in this JVM, after sweeping what a
+    * crashed change left.
+    */
+  private def rewrite[T](body: Manifest => T): T = locks.rewrite.synchronized {
+    body(locks.commit.synchronized { val m = snapshot(); sweep(m); m })
+  }
+
   /** Commits the files `gone` replaced by `added`, then deletes `gone`:
     * a reader sees the old files or the new ones, never a mix. The
-    * manifest is re-read first, so an insert that committed since `m`
-    * was read stays in it.
+    * manifest is re-read and replaced under the commit lock, so an
+    * insert either commits wholly before (and stays in it) or reads the
+    * manifest after (and keeps `added`).
     */
-  private def swap(m: Manifest, gone: Seq[LogFile], added: Seq[LogFile]): Unit = {
+  private def swap(gone: Seq[LogFile], added: Seq[LogFile]): Unit = {
     val drop = gone.map(_.path).toSet
-    val now = Manifest.read(dir).getOrElse(m)
-    Manifest.write(dir, now.copy(files = now.files.filterNot(f => drop(f.path)) ++ added))
-    gone.foreach { f =>
-      val p = Paths.get(dir, f.path)
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    locks.commit.synchronized {
+      val now = Manifest.read(dir).getOrElse(
+        throw new IllegalStateException(s"$dir: no manifest to commit a rewrite to"))
+      Manifest.write(dir, now.copy(files = now.files.filterNot(f => drop(f.path)) ++ added))
     }
+    gone.foreach(f => remove(f.path))
   }
 
   /** `df` with every typed metadata projection computed from its JSON:
@@ -301,14 +350,13 @@ final class EventsTable(spark: SparkSession, dir: String,
     * head, which does not move: when the entity owns the newest events,
     * their ids are still never handed to a later insert.
     */
-  def forget(foreignId: Long): Long = {
-    val m = snapshot()
+  def forget(foreignId: Long): Long = rewrite { m =>
     val entity = col("foreignId") <=> foreignId
     val hit = canonicalize(frame(m)).filter(entity).select(input_file_name())
       .distinct().collect().map(r => Paths.get(new java.net.URI(r.getString(0)))).toSet
     val gone = m.files.filter(f => hit(rootDir.resolve(f.path)))
     if (gone.nonEmpty)
-      swap(m, gone, stage(physicalize(canonicalize(frame(m.copy(files = gone))).filter(!entity))))
+      swap(gone, stage(physicalize(canonicalize(frame(m.copy(files = gone))).filter(!entity))))
     m.head
   }
 
@@ -329,16 +377,17 @@ final class EventsTable(spark: SparkSession, dir: String,
     */
   def compact(targetBytes: Long = 128L << 20): Int = {
     if (!exists) return 0
-    val m = snapshot()
-    val idCol = col(physical("id"))
-    val order = (if (partitionByDate) Seq(col("date")) else Nil) :+ idCol
-    val rewrites = m.files.groupBy(_.date).values.toSeq.flatMap { files =>
-      val want = math.max(1L, (files.map(_.length).sum + targetBytes - 1) / targetBytes).toInt
-      Option.when(files.size > want)(files -> stage(withMetas(frame(m.copy(files = files)))
-        .repartitionByRange(want, idCol).sortWithinPartitions(order: _*)))
+    rewrite { m =>
+      val idCol = col(physical("id"))
+      val order = (if (partitionByDate) Seq(col("date")) else Nil) :+ idCol
+      val rewrites = m.files.groupBy(_.date).values.toSeq.flatMap { files =>
+        val want = math.max(1L, (files.map(_.length).sum + targetBytes - 1) / targetBytes).toInt
+        Option.when(files.size > want)(files -> stage(withMetas(frame(m.copy(files = files)))
+          .repartitionByRange(want, idCol).sortWithinPartitions(order: _*)))
+      }
+      if (rewrites.nonEmpty) swap(rewrites.flatMap(_._1), rewrites.flatMap(_._2))
+      rewrites.size
     }
-    if (rewrites.nonEmpty) swap(m, rewrites.flatMap(_._1), rewrites.flatMap(_._2))
-    rewrites.size
   }
 
   /** Schema evolution (reference intent: rsql/eventstable.go:67–120
@@ -356,14 +405,15 @@ final class EventsTable(spark: SparkSession, dir: String,
     */
   def evolve(): Int = {
     if (!exists || metaColumns.isEmpty) return 0
-    val m = snapshot()
-    val stale = m.files.filter { f =>
-      val have = footer(Paths.get(dir, f.path)).getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName).toSet
-      metaColumns.exists(c => !have(c.name))
+    rewrite { m =>
+      val stale = m.files.filter { f =>
+        val have = footer(Paths.get(dir, f.path)).getFileMetaData.getSchema.getFields.asScala
+          .map(_.getName).toSet
+        metaColumns.exists(c => !have(c.name))
+      }
+      if (stale.nonEmpty) swap(stale, stage(withMetas(frame(m.copy(files = stale)))))
+      stale.map(_.date).distinct.size
     }
-    if (stale.nonEmpty) swap(m, stale, stage(withMetas(frame(m.copy(files = stale)))))
-    stale.map(_.date).distinct.size
   }
 
   /** Insert a batch of events (columns: eventType, foreignId, ts,
@@ -374,25 +424,31 @@ final class EventsTable(spark: SparkSession, dir: String,
     * partitions, for a frame with more than one). The new files' row
     * counts and id ranges come from their footers, and the commit point
     * is the manifest that adds them: a reader sees all of the insert or
-    * none of it (the role the reference's SQL transaction plays).
+    * none of it (the role the reference's SQL transaction plays). The
+    * commit lock is held from reading the head to the commit, so inserts
+    * in one JVM take disjoint id ranges and a rewrite's commit never
+    * lands between an insert's read and its commit.
     */
   def insert(events: DataFrame): Long = {
-    val m = snapshot()
-    val cols = Seq("eventType", "foreignId", "ts", "value", "metadata")
-    val traceCol =
-      if (events.columns.contains("trace")) col("trace").cast("binary")
-      else lit(null).cast("binary")
-    val src = events.select(cols.map(col) :+ traceCol.as("trace"): _*)
-    val withIds = src.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq((m.head + 1 + i) +: r.toSeq)
+    val newHead = locks.commit.synchronized {
+      val m = snapshot()
+      val cols = Seq("eventType", "foreignId", "ts", "value", "metadata")
+      val traceCol =
+        if (events.columns.contains("trace")) col("trace").cast("binary")
+        else lit(null).cast("binary")
+      val src = events.select(cols.map(col) :+ traceCol.as("trace"): _*)
+      val withIds = src.rdd.zipWithIndex().map { case (r, i) =>
+        Row.fromSeq((m.head + 1 + i) +: r.toSeq)
+      }
+      // typed metadata projections: parse the JSON ONCE here at write,
+      // never again on any read
+      val df = withMetas(spark.createDataFrame(withIds, schema))
+      val added = stage(
+        if (partitionByDate) df.withColumn("date", to_date(col(physical("ts")))) else df)
+      val head = m.head + added.map(_.rows).sum
+      Manifest.write(dir, Manifest(head, m.files ++ added)) // the commit point
+      head
     }
-    // typed metadata projections: parse the JSON ONCE here at write,
-    // never again on any read
-    val df = withMetas(spark.createDataFrame(withIds, schema))
-    val added = stage(
-      if (partitionByDate) df.withColumn("date", to_date(col(physical("ts")))) else df)
-    val newHead = m.head + added.map(_.rows).sum
-    Manifest.write(dir, Manifest(newHead, m.files ++ added)) // the commit point
     // post-commit notify (the reference returns a NotifyFunc to call
     // after tx commit — rsql/eventstable.go:245)
     notifier.foreach(_.notifyInsert())
@@ -401,6 +457,19 @@ final class EventsTable(spark: SparkSession, dir: String,
 }
 
 object EventsTable {
+
+  /** The locks of one log: `commit` guards each step from reading the
+    * manifest to committing it; `rewrite` keeps compact, forget and
+    * evolve to one at a time.
+    */
+  private final class Locks {
+    val commit = new Object
+    val rewrite = new Object
+  }
+
+  private val locks = new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, Locks]()
+
+  private def locksOf(root: java.nio.file.Path): Locks = locks.computeIfAbsent(root, _ => new Locks)
 
   /** The committed head of `df` when it is an unfiltered manifest-backed
     * read — a manifest scan under projections that pass `id` through —
@@ -451,6 +520,9 @@ private[sources] object Manifest {
           Option.when(f(6) != "-")(f(6)))
       }.toVector))
     } catch { case _: NoSuchFileException => None }
+
+  /** Whether `name` is a manifest temp file, left by a crashed `write`. */
+  def isTemp(name: String): Boolean = name.startsWith(s"$Name.") && name.endsWith(".tmp")
 
   /** Atomically replaces the manifest of the table rooted at `dir`. */
   def write(dir: String, m: Manifest): Unit = {

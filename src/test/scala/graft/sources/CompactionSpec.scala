@@ -91,26 +91,34 @@ class CompactionSpec extends AnyFunSuite {
     for (b <- 1 to 3) table.insert(mkBatch("2024-02-01 12:00:00", 4, s"b$b"))
     val before = table.log.df.collect().toSet
 
-    // Simulate a compaction that crashed after writing its staging
-    // copy: a full duplicate of the partition parked where compact()
-    // stages it. A reader of the root must NOT see those rows (the
-    // old in-root <root>/date=X.compacting staging made every row
-    // appear twice and corrupted the date column).
-    val stagingRoot = new java.io.File(dir + ".compacting")
+    // Simulate a change that crashed mid-flight: a full duplicate of
+    // the partition in a staging directory beside the root, where
+    // changes stage their writes, and a data file moved into the root
+    // that no manifest names (an uncommitted insert, or a file a
+    // rewrite replaced but had not deleted yet). A reader of the root
+    // must NOT see those rows (the old in-root <root>/date=X.compacting
+    // staging made every row appear twice and corrupted the date
+    // column).
+    val stagingRoot = new java.io.File(dir + ".staging-crashed")
     val stagedPart = new java.io.File(stagingRoot, "date=2024-02-01")
     spark.read.parquet(s"$dir/date=2024-02-01")
       .write.parquet(stagedPart.toString)
+    val orphan = new java.io.File(s"$dir/date=2024-02-01", "part-crashed.parquet")
+    Files.copy(parquetFiles(dir).head.toPath, orphan.toPath)
     assert(table.log.df.collect().toSet === before,
       "crash leftover staging dir leaked into partition discovery")
     assert(table.log.df.count() === before.size)
 
-    // compact() completes cleanly beside the leftover and leaves no
-    // staging directory of its own
+    // compact() sweeps the leftovers up front and completes cleanly
     val n = table.compact(targetBytes = 1L << 30)
     assert(n === 1)
+    assert(!stagingRoot.exists(), "staging root not swept after compact")
+    assert(!orphan.exists(), "uncommitted data file not swept after compact")
     val staged = new java.io.File(dir).getParentFile.list().filter(_.startsWith("log.staging"))
     assert(staged.isEmpty, s"staging dirs left after compact: ${staged.mkString(",")}")
     assert(table.log.df.collect().toSet === before)
+    assert(Manifest.read(dir).get.files.map(_.path) ===
+      parquetFiles(dir).map(f => new java.io.File(dir).toURI.relativize(f.toURI).getPath))
     // nothing named *.compacting (or any non-partition dir) inside the root
     val strays = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && !f.getName.startsWith("date="))

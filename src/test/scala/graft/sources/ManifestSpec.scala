@@ -142,6 +142,27 @@ class ManifestSpec extends AnyFunSuite {
     assert(table.log.df.select("id").collect().map(_.getLong(0)).sorted.toSeq === (0L to 6L))
   }
 
+  test("inserts beside compact and forget keep every commit, and the log stays readable") {
+    val dir = tmpLog("graft-manifest-race")
+    val table = new EventsTable(spark, dir)
+    (0 until 4).foreach(_ => table.insert(events(5, fid = _ => 1L)))
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() =>
+      try (0 until 8).foreach(i => table.insert(events(5, fid = _ => 100L + i)))
+      catch { case e: Throwable => failure.set(e) })
+    writer.start()
+    try (0 until 3).foreach { _ => table.compact(targetBytes = 1L << 30); table.forget(1L) }
+    finally writer.join(120000)
+    assert(!writer.isAlive, "inserts did not finish")
+    assert(failure.get() === null)
+    // a rewrite's commit never drops a racing insert's files, and an
+    // insert's commit never brings back the files a rewrite replaced
+    val m = Manifest.read(dir).get
+    assert(m.files.map(_.path).toSet === listed(dir))
+    assert(m.head === 59L)
+    assert(table.log.df.select("id").collect().map(_.getLong(0)).sorted.toSeq === (20L to 59L))
+  }
+
   test("a reader never sees part of a multi-partition insert") {
     val dir = tmpLog("graft-manifest-atomic")
     val table = new EventsTable(spark, dir)
